@@ -24,10 +24,22 @@ def log(msg: str) -> None:
 
 def host_settings(work: str) -> dict:
     """Size Spark for this host, through the engine's own environment
-    knobs: every core the process may use, a quarter of physical RAM
-    for the driver heap (local mode runs the executors inside it), and
-    scratch directories inside the benchmark's work directory."""
-    cpus = len(os.sched_getaffinity(0))
+    knobs: pin this process, and so the JVM, its Python workers and the
+    broker stand-in, to half the cores it may use, with a task slot on
+    each; a quarter of physical RAM for the driver heap (local mode runs
+    the executors inside it); scratch directories inside the benchmark's
+    work directory.
+
+    Half the cores, because on a shared host the hypervisor deschedules
+    virtual CPUs: spread over every core, each query's chain of hand-offs
+    between driver and task threads waits on whichever one is stolen.
+    On a 4-core host stealing 2-7%, olap runs pinned to 2 cores read
+    5-25% slower (least when steal is high) but spread about half as
+    much as runs on all 4."""
+    usable = sorted(os.sched_getaffinity(0))
+    pinned = usable[: max(len(usable) // 2, 1)]
+    os.sched_setaffinity(0, pinned)
+    cpus = len(pinned)
     with open("/proc/meminfo") as f:
         mem_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
     env = {
@@ -44,7 +56,7 @@ def host_settings(work: str) -> dict:
         os.makedirs(env[key], exist_ok=True)
     os.environ.update(env)
     time.tzset()
-    return {"cpus": cpus, "mem_total_mb": mem_kb // 1024, **env}
+    return {"cores": len(usable), "pinned": pinned, "mem_total_mb": mem_kb // 1024, **env}
 
 
 def spark_conf(work: str) -> dict[str, str]:
@@ -137,9 +149,11 @@ def p90(values: list[float]) -> float:
 class RssSampler:
     """Peak resident memory of the Spark JVM and its Python workers: the
     sum over every descendant process of this one, except the subtrees
-    of ``exclude`` (the broker stand-in), sampled every 100 ms."""
+    of ``exclude`` (the broker stand-in), sampled every 100 ms. Sampling
+    holds the driver's GIL, so untraced runs leave it off."""
 
-    def __init__(self) -> None:
+    def __init__(self, enabled: bool) -> None:
+        self.enabled = enabled
         self.exclude: set[int] = set()
         self.peak_bytes = 0
         self._stop = threading.Event()
@@ -147,12 +161,14 @@ class RssSampler:
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def __enter__(self) -> "RssSampler":
-        self._thread.start()
+        if self.enabled:
+            self._thread.start()
         return self
 
     def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join()
+        if self.enabled:
+            self._stop.set()
+            self._thread.join()
 
     def _run(self) -> None:
         while not self._stop.wait(0.1):

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload olap_tpch --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload olap_tpch --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout. Builds the workload's inputs from the
 seed, runs it against the engine in ``flink_kakfa_spark`` (imported from
