@@ -3,10 +3,13 @@
 Completes the reference's produce/consume surface (S2/S3) without the
 ``spark-sql-kafka-0-10`` connector jar this container cannot obtain:
 
-- ``read_topic``   — distributed batch read: one Spark task fetches one
-  Kafka partition (the same task↔partition mapping the real connector
-  uses), emitting the connector-compatible schema
-  (key, value, topic, partition, offset, timestamp).
+- ``read_topic_incremental`` — distributed batch read of offsets
+  [start, end) per partition, end offsets snapshotted by ListOffsets:
+  one Spark task fetches one Kafka partition (the same task↔partition
+  mapping the real connector uses), emitting the connector-compatible
+  schema (key, value, topic, partition, offset, timestamp).
+- ``read_topic``   — its snapshot read from offset 0: the whole topic
+  as of the call.
 - ``write_topic``  — distributed produce: each input partition's rows
   are appended via Produce RPCs in bounded record batches.
 - ``foreach_batch_sink`` — adapter so a streaming query can sink to
@@ -32,12 +35,16 @@ feedback a distributed one-pass sink deliberately avoids.
 from __future__ import annotations
 
 import os
-import struct
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.streaming.topics import _enc_str, _rpc, API_METADATA
+from flink_kakfa_spark.streaming.topics import (
+    ERR_NONE,
+    ERR_UNKNOWN_TOPIC,
+    TopicAdminError,
+    cluster_metadata,
+)
 
 _PKG_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -52,79 +59,19 @@ _PRODUCE_CHUNK = 500  # records per Produce RPC
 
 
 def partition_ids(bootstrap: str, topic: str) -> list[int]:
-    """Partition ids for a topic (Metadata v1, leader fields drained)."""
-    host, port = bootstrap.rsplit(":", 1)
-    body = struct.pack(">i", 1) + _enc_str(topic)
-    rd = _rpc((host, int(port)), API_METADATA, 1, body)
-    for _ in range(rd.i32()):  # brokers
-        rd.i32()
-        rd.string()
-        rd.i32()
-        rd.string()
-    rd.i32()  # controller id
-    pids: list[int] = []
-    for _ in range(rd.i32()):
-        err = rd.i16()
-        name = rd.string()
-        rd.boolean()
-        n_parts = rd.i32()
-        for _ in range(n_parts):
-            rd.i16()  # partition error
-            pid = rd.i32()
-            rd.i32()  # leader
-            for _ in range(rd.i32()):
-                rd.i32()
-            for _ in range(rd.i32()):
-                rd.i32()
-            if name == topic:
-                pids.append(pid)
-        if name == topic and err != 0:
-            from flink_kakfa_spark.streaming.topics import TopicAdminError
-
-            raise TopicAdminError(f"Metadata({topic}) error {err}")
-    return sorted(pids)
+    """Sorted partition ids for a topic (Metadata v1)."""
+    _, _, meta = cluster_metadata(bootstrap, [topic])
+    err, pids = meta.get(topic, (ERR_UNKNOWN_TOPIC, []))
+    if err != ERR_NONE:
+        raise TopicAdminError(f"Metadata({topic}) error {err}")
+    return pids
 
 
 def read_topic(spark: SparkSession, bootstrap: str, topic: str) -> DataFrame:
-    """Batch-read a whole topic, one Spark task per Kafka partition.
-
-    Offsets are range-stable: each task drains [earliest, high
-    watermark) for exactly one partition, so re-running the read over
-    an unchanged topic yields identical rows — the property the
-    oracle-style tests lean on.
-    """
-    pids = partition_ids(bootstrap, topic)
-    pkg_root = _PKG_ROOT
-
-    def gen(batches):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        import pandas as pd
-
-        from flink_kakfa_spark.streaming.wire import fetch_all
-
-        for pdf in batches:
-            for p in pdf["partition"]:
-                p = int(p)
-                recs = fetch_all(bootstrap, topic, p)
-                yield pd.DataFrame(
-                    {
-                        "key": [r.key for r in recs],
-                        "value": [r.value for r in recs],
-                        "topic": [topic] * len(recs),
-                        "partition": [p] * len(recs),
-                        "offset": [r.offset for r in recs],
-                        "timestamp_ms": [r.timestamp_ms for r in recs],
-                    }
-                )
-
-    seed = spark.createDataFrame([(p,) for p in pids], "partition int")
-    # one task per partition: the fetch loop is the task's whole input
-    return seed.repartition(len(pids), "partition").mapInPandas(
-        gen, schema=READ_SCHEMA
-    )
+    """The whole topic as of this call: ``read_topic_incremental`` from
+    offset 0. End offsets are fixed here, so the frame yields the same
+    rows however many records land after it."""
+    return read_topic_incremental(spark, bootstrap, topic)[0]
 
 
 def read_topic_incremental(
@@ -163,20 +110,12 @@ def read_topic_incremental(
             sys.path.insert(0, pkg_root)
         import pandas as pd
 
-        from flink_kakfa_spark.streaming.wire import fetch
+        from flink_kakfa_spark.streaming.wire import fetch_range
 
         for pdf in batches:
             for p, lo, hi in zip(pdf["partition"], pdf["lo"], pdf["hi"]):
-                p, lo, hi = int(p), int(lo), int(hi)
-                rows = []
-                offset = lo
-                while offset < hi:
-                    recs, _ = fetch(bootstrap, topic, p, offset)
-                    fresh = [r for r in recs if lo <= r.offset < hi]
-                    if not fresh:
-                        break
-                    rows.extend(fresh)
-                    offset = fresh[-1].offset + 1
+                p = int(p)
+                rows = fetch_range(bootstrap, topic, p, int(lo), int(hi))
                 yield pd.DataFrame(
                     {
                         "key": [r.key for r in rows],

@@ -17,12 +17,13 @@ Semantics deltas vs the reference, by design:
 - Fetch batching (MinBytes/MaxBytes, ``go/consumer/consumer.go:103-104``)
   maps to ``maxOffsetsPerTrigger``/``minPartitions`` rate control.
 
-Jar-free alternative: when the connector jar is unobtainable (this
-container), the stdlib data plane (``wire.py`` + ``dataplane.py``)
-provides executable produce/consume — distributed per-partition
-fetch via ``mapInPandas``, Produce v3 RecordBatch writes, and a
-``foreachBatch`` streaming sink — verified against a wire-protocol
-fake broker in ``tests/test_dataplane.py``.
+Jar-free alternative: when the connector jar is unobtainable
+(``connector_available`` is the one probe for it), the stdlib data
+plane (``wire.py`` + ``dataplane.py``) provides executable
+produce/consume — distributed per-partition fetch via
+``mapInPandas``, Produce v3 RecordBatch writes, and a
+``foreachBatch`` streaming sink — verified against the wire-protocol
+broker stand-in in ``tests/conftest.py``.
 """
 
 from __future__ import annotations
@@ -62,17 +63,13 @@ def _require_kafka_connector(spark: SparkSession) -> None:
     absent (it is not bundled with a plain Spark install — submit with
     --packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>).
     """
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-        )
-    except Exception as exc:  # noqa: BLE001
+    if not connector_available(spark):
         raise RuntimeError(
             "Kafka source/sink requires the spark-sql-kafka connector on the "
             "classpath; launch with --packages "
             "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version> "
             "(not bundled in this environment)"
-        ) from exc
+        )
 
 
 def read_kafka_stream(
@@ -127,9 +124,3 @@ def write_kafka_stream(
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
-
-
-def log_sink(df: DataFrame) -> StreamingQuery:
-    """S4: console sink — the consumer's processMessage-as-log
-    (``go/consumer/consumer.go:79-81``)."""
-    return df.writeStream.format("console").option("truncate", "false").start()

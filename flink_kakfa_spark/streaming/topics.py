@@ -13,8 +13,9 @@ DeleteTopics v0) are the public Apache Kafka protocol spec
 
 Like the reference, callers gate on a configured broker
 (``KAFKA_BROKER``); the unit tests run the client against an
-in-process fake broker speaking canned protocol frames, so every
-encoder/decoder executes without external infrastructure.
+in-process broker stand-in speaking spec frames, so every
+encoder/decoder executes without external infrastructure. ``_rpc``
+and ``_Reader`` are shared with the data plane (``wire.py``).
 """
 
 from __future__ import annotations
@@ -86,6 +87,14 @@ class _Reader:
     def i32(self) -> int:
         return struct.unpack(">i", self._take(4))[0]
 
+    def i64(self) -> int:
+        return struct.unpack(">q", self._take(8))[0]
+
+    def bytes_(self) -> bytes:
+        """Kafka BYTES / NULLABLE_BYTES: int32 length prefix, -1 = null."""
+        n = self.i32()
+        return b"" if n <= 0 else self._take(n)
+
     def boolean(self) -> bool:
         return self._take(1) != b"\x00"
 
@@ -109,12 +118,18 @@ def _recv_exact(sock: socket.socket, n: int) -> bytes:
     return b"".join(chunks)
 
 
+def _addr(bootstrap: str) -> tuple[str, int]:
+    host, port = bootstrap.rsplit(":", 1)
+    return host, int(port)
+
+
 def _rpc(
     addr: tuple[str, int],
     api_key: int,
     api_version: int,
     body: bytes,
     timeout_s: float = 10.0,
+    max_frame: int = 16 * 1024 * 1024,
     correlation_id: int = 7,
 ) -> _Reader:
     """One request/response round-trip on a fresh connection."""
@@ -122,8 +137,9 @@ def _rpc(
         sock.sendall(_enc_request(api_key, api_version, correlation_id, body))
         (size,) = struct.unpack(">i", _recv_exact(sock, 4))
         # bound the frame before allocating: a corrupt/hostile broker can
-        # send a negative or multi-GB size (control-plane responses are KB)
-        if not 4 <= size <= 16 * 1024 * 1024:
+        # send a negative or multi-GB size (control-plane responses are
+        # KB; the data plane passes its own, data-sized bound)
+        if not 4 <= size <= max_frame:
             raise TopicAdminError(f"implausible response frame size: {size}")
         rd = _Reader(_recv_exact(sock, size))
     if rd.i32() != correlation_id:
@@ -135,20 +151,19 @@ def _rpc(
 
 def cluster_metadata(
     bootstrap: str, topics: list[str] | None = None
-) -> tuple[list[BrokerInfo], int, dict[str, int]]:
-    """Metadata v1: (brokers, controller_id, {topic: error_code}).
+) -> tuple[list[BrokerInfo], int, dict[str, tuple[int, list[int]]]]:
+    """Metadata v1: (brokers, controller_id, {topic: (error, partition ids)}).
 
     ``topics=None`` asks for all topics (null array), matching
     kafka-go's ``conn.Controller()`` discovery the reference uses.
     """
-    host, port = bootstrap.rsplit(":", 1)
     if topics is None:
         body = struct.pack(">i", -1)
     else:
         body = struct.pack(">i", len(topics)) + b"".join(
             _enc_str(t) for t in topics
         )
-    rd = _rpc((host, int(port)), API_METADATA, 1, body)
+    rd = _rpc(_addr(bootstrap), API_METADATA, 1, body)
     brokers = []
     for _ in range(rd.i32()):
         node_id = rd.i32()
@@ -157,21 +172,22 @@ def cluster_metadata(
         rd.string()  # rack (unused)
         brokers.append(BrokerInfo(node_id, bhost, bport))
     controller_id = rd.i32()
-    topic_errors: dict[str, int] = {}
+    meta = {}
     for _ in range(rd.i32()):
         err = rd.i16()
         name = rd.string() or ""
         rd.boolean()  # is_internal
-        for _ in range(rd.i32()):  # partitions (drained, not needed)
+        pids = []
+        for _ in range(rd.i32()):
             rd.i16()  # partition error
-            rd.i32()  # partition id
+            pids.append(rd.i32())
             rd.i32()  # leader
             for _ in range(rd.i32()):
                 rd.i32()  # replica
             for _ in range(rd.i32()):
                 rd.i32()  # isr
-        topic_errors[name] = err
-    return brokers, controller_id, topic_errors
+        meta[name] = (err, sorted(pids))
+    return brokers, controller_id, meta
 
 
 def find_controller(bootstrap: str) -> BrokerInfo:
@@ -241,5 +257,5 @@ def delete_topic(bootstrap: str, topic: str, timeout_ms: int = 10_000) -> str:
 
 def topic_exists(bootstrap: str, topic: str) -> bool:
     """Metadata probe for one topic (error 3 = unknown topic/partition)."""
-    _, _, errors = cluster_metadata(bootstrap, topics=[topic])
-    return errors.get(topic, ERR_UNKNOWN_TOPIC) == ERR_NONE
+    _, _, meta = cluster_metadata(bootstrap, topics=[topic])
+    return meta.get(topic, (ERR_UNKNOWN_TOPIC,))[0] == ERR_NONE

@@ -12,10 +12,12 @@ spec (https://kafka.apache.org/protocol):
   brokers speak): varint/zigzag field widths, CRC-32C (Castagnoli)
   over the post-crc bytes.
 - **Produce v3** (first version carrying RecordBatch; header v1).
-- **Fetch v4** (RecordBatch + isolation level; throttle-first layout).
+- **Fetch v4** (RecordBatch + isolation level; throttle-first layout),
+  drained over an offset range by ``fetch_range``.
 - **ListOffsets v1** (earliest/latest bounds for incremental reads).
 
-The unit tests run all of this against an in-process fake broker
+RPCs go through ``topics._rpc`` with a data-sized frame bound. The
+unit tests run all of this against an in-process broker stand-in
 speaking the same spec frames over real TCP (mirroring the reference's
 env-gated integration idiom, ``go/producer/producer_test.go:21-23``);
 with ``KAFKA_BROKER`` set, the identical bytes go to a real broker.
@@ -24,17 +26,15 @@ with ``KAFKA_BROKER`` set, the identical bytes go to a real broker.
 from __future__ import annotations
 
 import gzip
-import socket
 import struct
 import time
 from typing import NamedTuple
 
 from flink_kakfa_spark.streaming.topics import (
     TopicAdminError,
-    _enc_request,
+    _addr,
     _enc_str,
-    _Reader,
-    _recv_exact,
+    _rpc,
 )
 
 API_PRODUCE = 0
@@ -46,7 +46,9 @@ LATEST = -1
 
 # Fetch frames carry data; allow more than the control-plane cap but
 # still bound allocation against corrupt/hostile length prefixes.
+# Produce waits up to its 30 s broker-side timeout (acks=-1).
 _MAX_DATA_FRAME = 128 * 1024 * 1024
+_DATA_RPC = {"timeout_s": 30.0, "max_frame": _MAX_DATA_FRAME}
 
 
 # ------------------------------------------------------------- CRC-32C
@@ -251,41 +253,6 @@ def decode_record_batches(buf: bytes) -> list[Record]:
     return out
 
 
-# ------------------------------------------------------------- RPC I/O
-
-def _rpc(
-    addr: tuple[str, int],
-    api_key: int,
-    api_version: int,
-    body: bytes,
-    timeout_s: float = 30.0,
-    correlation_id: int = 11,
-) -> _Reader:
-    """Data-plane twin of topics._rpc with a data-sized frame bound."""
-    with socket.create_connection(addr, timeout=timeout_s) as sock:
-        sock.sendall(_enc_request(api_key, api_version, correlation_id, body))
-        (size,) = struct.unpack(">i", _recv_exact(sock, 4))
-        if not 4 <= size <= _MAX_DATA_FRAME:
-            raise TopicAdminError(f"implausible response frame size: {size}")
-        rd = _Reader(_recv_exact(sock, size))
-    if rd.i32() != correlation_id:
-        raise TopicAdminError("correlation id mismatch")
-    return rd
-
-
-def _i64(rd: _Reader) -> int:
-    return struct.unpack(">q", rd._take(8))[0]
-
-
-def _i8(rd: _Reader) -> int:
-    return struct.unpack(">b", rd._take(1))[0]
-
-
-def _bytes(rd: _Reader) -> bytes:
-    n = rd.i32()
-    return b"" if n <= 0 else rd._take(n)
-
-
 # ------------------------------------------------------------ Produce v3
 
 def produce(
@@ -302,7 +269,6 @@ def produce(
     ``RequireAll`` default the reference producer relies on for its
     at-least-once claim.
     """
-    host, port = bootstrap.rsplit(":", 1)
     batch = encode_record_batch(records)
     body = (
         _enc_str(None)  # transactional_id
@@ -314,15 +280,15 @@ def produce(
         + struct.pack(">i", len(batch))
         + batch
     )
-    rd = _rpc((host, int(port)), API_PRODUCE, 3, body)
+    rd = _rpc(_addr(bootstrap), API_PRODUCE, 3, body, **_DATA_RPC)
     base_offset = -1
     for _ in range(rd.i32()):
         name = rd.string()
         for _ in range(rd.i32()):
             pid = rd.i32()
             err = rd.i16()
-            off = _i64(rd)
-            _i64(rd)  # log_append_time
+            off = rd.i64()
+            rd.i64()  # log_append_time
             if name == topic and pid == partition:
                 if err != 0:
                     raise TopicAdminError(f"Produce({topic}/{pid}) error {err}")
@@ -344,7 +310,6 @@ def fetch(
     max_wait_ms: int = 500,
 ) -> tuple[list[Record], int]:
     """Fetch v4 from ``offset``: returns (records, high_watermark)."""
-    host, port = bootstrap.rsplit(":", 1)
     body = (
         struct.pack(">iiii", -1, max_wait_ms, 1, max_bytes)  # replica/wait/min/max
         + struct.pack(">b", 0)  # isolation_level: read_uncommitted
@@ -353,7 +318,7 @@ def fetch(
         + struct.pack(">i", 1)
         + struct.pack(">iqi", partition, offset, max_bytes)
     )
-    rd = _rpc((host, int(port)), API_FETCH, 4, body)
+    rd = _rpc(_addr(bootstrap), API_FETCH, 4, body, **_DATA_RPC)
     rd.i32()  # throttle_time_ms (first in Fetch v1+)
     records: list[Record] = []
     hwm = 0
@@ -362,13 +327,13 @@ def fetch(
         for _ in range(rd.i32()):
             pid = rd.i32()
             err = rd.i16()
-            p_hwm = _i64(rd)
-            _i64(rd)  # last_stable_offset
+            p_hwm = rd.i64()
+            rd.i64()  # last_stable_offset
             n_aborted = rd.i32()
             for _ in range(max(n_aborted, 0)):
-                _i64(rd)  # producer_id
-                _i64(rd)  # first_offset
-            record_set = _bytes(rd)
+                rd.i64()  # producer_id
+                rd.i64()  # first_offset
+            record_set = rd.bytes_()
             if name == topic and pid == partition:
                 if err != 0:
                     raise TopicAdminError(f"Fetch({topic}/{pid}) error {err}")
@@ -377,19 +342,29 @@ def fetch(
     return records, hwm
 
 
-def fetch_all(
-    bootstrap: str, topic: str, partition: int = 0, start: int = 0
+def fetch_range(
+    bootstrap: str, topic: str, partition: int, lo: int, hi: int
 ) -> list[Record]:
-    """Drain a partition from ``start`` to the current high watermark."""
+    """Every record with offset in [lo, hi), in offset order.
+
+    ``hi`` comes from an earlier ListOffsets, so a fetch with nothing
+    at or past the current offset is a short read: raise rather than
+    let the caller commit ``hi`` over records it never saw. Records
+    past ``hi`` (offsets compacted away below it) end the range.
+    """
     out: list[Record] = []
-    offset = start
-    while True:
-        records, hwm = fetch(bootstrap, topic, partition, offset)
+    offset = lo
+    while offset < hi:
+        records, _ = fetch(bootstrap, topic, partition, offset)
         fresh = [r for r in records if r.offset >= offset]
-        out.extend(fresh)
-        offset = fresh[-1].offset + 1 if fresh else offset
-        if offset >= hwm or not fresh:
-            return out
+        if not fresh:
+            raise TopicAdminError(
+                f"Fetch({topic}/{partition}) returned nothing at offset "
+                f"{offset}, below end offset {hi}"
+            )
+        out.extend(r for r in fresh if r.offset < hi)
+        offset = fresh[-1].offset + 1
+    return out
 
 
 # -------------------------------------------------------- ListOffsets v1
@@ -398,7 +373,6 @@ def list_offset(
     bootstrap: str, topic: str, partition: int = 0, at: int = LATEST
 ) -> int:
     """ListOffsets v1: log start (EARLIEST) / high watermark (LATEST)."""
-    host, port = bootstrap.rsplit(":", 1)
     body = (
         struct.pack(">i", -1)  # replica_id
         + struct.pack(">i", 1)
@@ -406,14 +380,14 @@ def list_offset(
         + struct.pack(">i", 1)
         + struct.pack(">iq", partition, at)
     )
-    rd = _rpc((host, int(port)), API_LIST_OFFSETS, 1, body)
+    rd = _rpc(_addr(bootstrap), API_LIST_OFFSETS, 1, body, **_DATA_RPC)
     for _ in range(rd.i32()):
         name = rd.string()
         for _ in range(rd.i32()):
             pid = rd.i32()
             err = rd.i16()
-            _i64(rd)  # timestamp
-            off = _i64(rd)
+            rd.i64()  # timestamp
+            off = rd.i64()
             if name == topic and pid == partition:
                 if err != 0:
                     raise TopicAdminError(f"ListOffsets({topic}/{pid}) error {err}")

@@ -1,7 +1,7 @@
 """S2/S3 data-plane tests: RecordBatch codec, Produce/Fetch/ListOffsets
-RPCs, and the distributed Spark read/write paths — all against an
-in-process fake broker speaking spec frames over real TCP (the same
-broker-free idiom as test_topics.py, extended to the data plane).
+RPCs, and the distributed Spark read/write paths — all against the
+in-process broker stand-in speaking spec frames over real TCP
+(``broker`` fixture, tests/conftest.py, shared with test_topics.py).
 
 The integration test mirrors the reference's round-trip
 (go/integration/integration_test.go:20-62): produce generated
@@ -11,9 +11,6 @@ equals the batch word count of the same sentences.
 
 from __future__ import annotations
 
-import socketserver
-import struct
-import threading
 import time
 
 import pytest
@@ -28,223 +25,10 @@ from flink_kakfa_spark.streaming.wire import (
     enc_varint,
     encode_record_batch,
     fetch,
-    fetch_all,
+    fetch_range,
     list_offset,
     produce,
 )
-
-
-def _s(s):
-    b = s.encode()
-    return struct.pack(">h", len(b)) + b
-
-
-class _DataBroker(socketserver.ThreadingTCPServer):
-    """Fake broker: Metadata v1 (with partition metadata), Produce v3,
-    Fetch v4, ListOffsets v1. One request per connection, like the
-    client's one-shot _rpc."""
-
-    allow_reuse_address = True
-    daemon_threads = True
-
-    def __init__(self):
-        super().__init__(("127.0.0.1", 0), _DataHandler)
-        self.topics: dict[str, dict[int, dict]] = {}
-        self.lock = threading.Lock()
-
-    def add_topic(self, name: str, n_parts: int = 1) -> None:
-        with self.lock:
-            self.topics[name] = {
-                p: {"batches": [], "next": 0} for p in range(n_parts)
-            }
-
-    @property
-    def addr(self) -> str:
-        return f"127.0.0.1:{self.server_address[1]}"
-
-
-class _Cursor:
-    def __init__(self, buf):
-        self.buf, self.pos = buf, 0
-
-    def take(self, n):
-        b = self.buf[self.pos : self.pos + n]
-        self.pos += n
-        return b
-
-    def i16(self):
-        return struct.unpack(">h", self.take(2))[0]
-
-    def i32(self):
-        return struct.unpack(">i", self.take(4))[0]
-
-    def i64(self):
-        return struct.unpack(">q", self.take(8))[0]
-
-    def i8(self):
-        return struct.unpack(">b", self.take(1))[0]
-
-    def string(self):
-        n = self.i16()
-        return None if n == -1 else self.take(n).decode()
-
-    def bytes_(self):
-        n = self.i32()
-        return b"" if n <= 0 else self.take(n)
-
-
-class _DataHandler(socketserver.BaseRequestHandler):
-    def _recv(self, n):
-        buf = b""
-        while len(buf) < n:
-            b = self.request.recv(n - len(buf))
-            if not b:
-                raise ConnectionError
-            buf += b
-        return buf
-
-    def handle(self):
-        try:
-            (size,) = struct.unpack(">i", self._recv(4))
-        except ConnectionError:
-            return
-        payload = self._recv(size)
-        api_key, _version, corr = struct.unpack(">hhi", payload[:8])
-        (cid_len,) = struct.unpack(">h", payload[8:10])
-        body = _Cursor(payload[10 + max(cid_len, 0):])
-        srv: _DataBroker = self.server  # type: ignore[assignment]
-        if api_key == 3:
-            resp = self._metadata(srv, body)
-        elif api_key == 0:
-            resp = self._produce(srv, body)
-        elif api_key == 1:
-            resp = self._fetch(srv, body)
-        elif api_key == 2:
-            resp = self._list_offsets(srv, body)
-        else:  # pragma: no cover
-            resp = b""
-        frame = struct.pack(">i", corr) + resp
-        self.request.sendall(struct.pack(">i", len(frame)) + frame)
-
-    def _metadata(self, srv, body):
-        n = body.i32()
-        names = [body.string() for _ in range(max(n, 0))]
-        with srv.lock:
-            topics = {t: sorted(ps) for t, ps in srv.topics.items()}
-        if n == -1 or not names:
-            names = sorted(topics)
-        host, port = srv.server_address
-        out = struct.pack(">i", 1)
-        out += struct.pack(">i", 1) + _s(host) + struct.pack(">i", port)
-        out += struct.pack(">h", -1)  # null rack
-        out += struct.pack(">i", 1)  # controller
-        out += struct.pack(">i", len(names))
-        for t in names:
-            known = t in topics
-            out += struct.pack(">h", 0 if known else 3) + _s(t) + b"\x00"
-            pids = topics.get(t, [])
-            out += struct.pack(">i", len(pids))
-            for p in pids:
-                out += struct.pack(">hiii", 0, p, 1, 1)  # err, pid, leader, 1 replica
-                out += struct.pack(">i", 1)  # replica id
-                out += struct.pack(">ii", 1, 1)  # isr: [1]
-        return out
-
-    def _produce(self, srv, body):
-        body.string()  # transactional_id
-        body.i16()  # acks
-        body.i32()  # timeout
-        out_parts = []
-        for _ in range(body.i32()):
-            topic = body.string()
-            for _ in range(body.i32()):
-                pid = body.i32()
-                record_set = body.bytes_()
-                recs = decode_record_batches(record_set)
-                with srv.lock:
-                    part = srv.topics.get(topic, {}).get(pid)
-                    if part is None:
-                        out_parts.append((topic, pid, 3, -1))  # unknown topic
-                        continue
-                    base = part["next"]
-                    stored = encode_record_batch(
-                        [(r.key, r.value, r.headers) for r in recs],
-                        base_offset=base,
-                        timestamp_ms=recs[0].timestamp_ms,
-                    )
-                    part["batches"].append((base, base + len(recs) - 1, stored))
-                    part["next"] = base + len(recs)
-                out_parts.append((topic, pid, 0, base))
-        out = struct.pack(">i", len(out_parts))
-        for topic, pid, err, base in out_parts:
-            out += _s(topic) + struct.pack(">i", 1)
-            out += struct.pack(">ihqq", pid, err, base, -1)
-        out += struct.pack(">i", 0)  # throttle
-        return out
-
-    def _fetch(self, srv, body):
-        body.i32()  # replica
-        body.i32()  # max_wait
-        body.i32()  # min_bytes
-        body.i32()  # max_bytes
-        body.i8()  # isolation
-        out = struct.pack(">i", 0)  # throttle first (v1+)
-        n_topics = body.i32()
-        out += struct.pack(">i", n_topics)
-        for _ in range(n_topics):
-            topic = body.string()
-            n_parts = body.i32()
-            out += _s(topic) + struct.pack(">i", n_parts)
-            for _ in range(n_parts):
-                pid = body.i32()
-                off = body.i64()
-                body.i32()  # partition max bytes
-                with srv.lock:
-                    part = srv.topics.get(topic, {}).get(pid)
-                    if part is None:
-                        out += struct.pack(">ihqqi", pid, 3, -1, -1, 0)
-                        out += struct.pack(">i", 0)
-                        continue
-                    chunks = [
-                        raw
-                        for lo, hi, raw in part["batches"]
-                        if hi >= off
-                    ]
-                    hwm = part["next"]
-                record_set = b"".join(chunks)
-                out += struct.pack(">ihqqi", pid, 0, hwm, hwm, 0)
-                out += struct.pack(">i", len(record_set)) + record_set
-        return out
-
-    def _list_offsets(self, srv, body):
-        body.i32()  # replica
-        out_parts = []
-        for _ in range(body.i32()):
-            topic = body.string()
-            for _ in range(body.i32()):
-                pid = body.i32()
-                at = body.i64()
-                with srv.lock:
-                    part = srv.topics.get(topic, {}).get(pid)
-                    nxt = -1 if part is None else part["next"]
-                err = 3 if part is None else 0
-                off = 0 if at == EARLIEST else nxt
-                out_parts.append((topic, pid, err, off))
-        out = struct.pack(">i", len(out_parts))
-        for topic, pid, err, off in out_parts:
-            out += _s(topic) + struct.pack(">i", 1)
-            out += struct.pack(">ihqq", pid, err, -1, off)
-        return out
-
-
-@pytest.fixture()
-def broker():
-    srv = _DataBroker()
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield srv
-    srv.shutdown()
-    srv.server_close()
 
 
 # ----------------------------------------------------------- codec unit
@@ -314,12 +98,26 @@ def test_produce_to_unknown_topic_raises(broker):
         produce(broker.addr, "missing", [(None, b"v")])
 
 
-def test_fetch_all_drains_across_batches(broker):
+def test_fetch_range_drains_across_batches(broker):
     broker.add_topic("t", 1)
     for i in range(7):
         produce(broker.addr, "t", [(None, f"m{i}".encode())])
-    recs = fetch_all(broker.addr, "t", 0)
+    recs = fetch_range(broker.addr, "t", 0, 0, 7)
     assert [r.value for r in recs] == [f"m{i}".encode() for i in range(7)]
+    # an inner range starts mid-batch-set and stops before the end
+    assert [r.offset for r in fetch_range(broker.addr, "t", 0, 2, 5)] == [2, 3, 4]
+    assert fetch_range(broker.addr, "t", 0, 7, 7) == []
+
+
+def test_fetch_range_raises_on_short_read(broker):
+    """A fetch with nothing at or past the wanted offset, below the end
+    offset, is a short read: it must raise, not return a prefix."""
+    broker.add_topic("t", 1)
+    produce(broker.addr, "t", [(None, b"m0")])
+    produce(broker.addr, "t", [(None, b"m1")])
+    broker.short_fetch = True  # fetch withholds the batch holding m1
+    with pytest.raises(TopicAdminError, match="offset 1"):
+        fetch_range(broker.addr, "t", 0, 0, 2)
 
 
 # ------------------------------------------------------ Spark data plane
@@ -337,6 +135,23 @@ def test_spark_read_topic_distributed(spark, broker):
         (bytes(r["value"]), r["partition"], r["offset"]) for r in rows
     } == {(b"p0-first", 0, 0), (b"p0-second", 0, 1), (b"p1-only", 1, 0)}
     assert all(r["topic"] == "t2" for r in rows)
+
+
+def test_read_topic_is_a_snapshot_of_the_call(spark, broker):
+    """read_topic fixes each partition's end offset when it is called:
+    records produced before the frame is collected are not in it."""
+    from flink_kakfa_spark.streaming.dataplane import read_topic
+
+    broker.add_topic("snap", 2)
+    produce(broker.addr, "snap", [(None, b"early-0")], 0)
+    produce(broker.addr, "snap", [(None, b"early-1")], 1)
+    df = read_topic(spark, broker.addr, "snap")
+    produce(broker.addr, "snap", [(None, b"late-0")], 0)
+    produce(broker.addr, "snap", [(None, b"late-1")], 1)
+    assert sorted(bytes(r["value"]) for r in df.collect()) == [
+        b"early-0",
+        b"early-1",
+    ]
 
 
 def test_spark_write_topic_round_robin(spark, broker):
@@ -427,7 +242,9 @@ def test_foreach_batch_sink_streams_to_kafka(spark, broker, tmp_path):
             time.sleep(0.3)
     finally:
         q.stop()
-    recs = fetch_all(broker.addr, "s1", 0)
+    recs = fetch_range(
+        broker.addr, "s1", 0, 0, list_offset(broker.addr, "s1", 0, LATEST)
+    )
     assert recs, "no records reached the topic"
     assert all(bytes(r.value).startswith(b"r-") for r in recs)
 
@@ -572,6 +389,48 @@ def test_kafka_matview_exactly_once_across_increments_and_crash(
     assert _counts_dict(current_counts(spark, state)) == {
         "alpha": 2,
         "beta": 2,
+        "gamma": 1,
+    }
+
+
+def test_kafka_matview_short_read_fails_without_committing(
+    spark, broker, tmp_path
+):
+    """A broker that answers a fetch with nothing in range must fail the
+    increment and leave commit.json byte-identical — never commit end
+    offsets over records the increment did not read."""
+    import json
+    import os
+
+    from flink_kakfa_spark.streaming.kafka_matview import (
+        consume_wordcount_increment,
+        current_counts,
+    )
+
+    broker.add_topic("mv-short", 1)
+    state = str(tmp_path / "state")
+    produce(broker.addr, "mv-short", [(None, b"alpha")])
+    consume_wordcount_increment(spark, broker.addr, "mv-short", state)
+    commit_path = os.path.join(state, "commit.json")
+    with open(commit_path, "rb") as f:
+        before = f.read()
+    assert json.loads(before)["offsets"] == {"0": 1}
+
+    produce(broker.addr, "mv-short", [(None, b"beta")])
+    produce(broker.addr, "mv-short", [(None, b"gamma")])
+    broker.short_fetch = True  # fetch withholds the batch holding gamma
+    with pytest.raises(Exception, match="returned nothing at offset 2"):
+        consume_wordcount_increment(spark, broker.addr, "mv-short", state)
+    with open(commit_path, "rb") as f:
+        assert f.read() == before
+
+    # once the broker serves the whole range, the retry reaches the oracle
+    broker.short_fetch = False
+    c = consume_wordcount_increment(spark, broker.addr, "mv-short", state)
+    assert c["offsets"] == {"0": 3} and c["new_rows"] == 2
+    assert _counts_dict(current_counts(spark, state)) == {
+        "alpha": 1,
+        "beta": 1,
         "gamma": 1,
     }
 

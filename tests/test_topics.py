@@ -1,7 +1,8 @@
-"""S7 topic-admin tests against an in-process fake broker.
+"""S7 topic-admin tests against the in-process broker stand-in
+(``broker`` fixture, tests/conftest.py).
 
-The fake speaks just enough Kafka wire protocol (Metadata v1,
-CreateTopics v0, DeleteTopics v0) for the client's full reference
+The stand-in speaks Metadata v1, CreateTopics v0 and DeleteTopics v0
+(plus the data-plane RPCs), enough for the client's full reference
 flow — dial broker → find controller → create topic → tolerate
 "already exists" (go/integration/integration_test.go:66-91) — to
 execute end-to-end over a real TCP socket, no external broker needed.
@@ -9,134 +10,17 @@ execute end-to-end over a real TCP socket, no external broker needed.
 
 from __future__ import annotations
 
-import socketserver
-import struct
 import threading
 
 import pytest
 
 from flink_kakfa_spark.streaming.topics import (
-    ERR_NONE,
-    ERR_TOPIC_ALREADY_EXISTS,
-    ERR_UNKNOWN_TOPIC,
     TopicAdminError,
     delete_topic,
     ensure_topic,
     find_controller,
     topic_exists,
 )
-
-
-def _s(s):  # Kafka STRING
-    b = s.encode()
-    return struct.pack(">h", len(b)) + b
-
-
-def _null_s():
-    return struct.pack(">h", -1)
-
-
-class _FakeBroker(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
-    def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
-        self.topics: set[str] = set()
-        self.lock = threading.Lock()
-
-    @property
-    def addr(self) -> str:
-        return f"127.0.0.1:{self.server_address[1]}"
-
-
-class _Handler(socketserver.BaseRequestHandler):
-    def _recv(self, n):
-        buf = b""
-        while len(buf) < n:
-            b = self.request.recv(n - len(buf))
-            if not b:
-                raise ConnectionError
-            buf += b
-        return buf
-
-    def handle(self):
-        try:
-            (size,) = struct.unpack(">i", self._recv(4))
-        except ConnectionError:
-            return
-        payload = self._recv(size)
-        api_key, _version, corr = struct.unpack(">hhi", payload[:8])
-        (cid_len,) = struct.unpack(">h", payload[8:10])
-        body = payload[10 + max(cid_len, 0):]
-        srv: _FakeBroker = self.server  # type: ignore[assignment]
-        if api_key == 3:
-            resp = self._metadata(srv, body)
-        elif api_key == 19:
-            resp = self._create(srv, body)
-        elif api_key == 20:
-            resp = self._delete(srv, body)
-        else:  # pragma: no cover - unexpected api
-            resp = b""
-        frame = struct.pack(">i", corr) + resp
-        self.request.sendall(struct.pack(">i", len(frame)) + frame)
-
-    def _requested_topics(self, body):
-        (n,) = struct.unpack(">i", body[:4])
-        pos, names = 4, []
-        for _ in range(max(n, 0)):
-            (ln,) = struct.unpack(">h", body[pos : pos + 2])
-            names.append(body[pos + 2 : pos + 2 + ln].decode())
-            pos += 2 + ln
-        return None if n == -1 else names, pos
-
-    def _metadata(self, srv, body):
-        names, _ = self._requested_topics(body)
-        with srv.lock:
-            if names is None:
-                names = sorted(srv.topics)
-            known = srv.topics.copy()
-        host, port = srv.server_address
-        out = struct.pack(">i", 1)  # one broker: node 1 = this fake
-        out += struct.pack(">i", 1) + _s(host) + struct.pack(">i", port)
-        out += _null_s()  # rack
-        out += struct.pack(">i", 1)  # controller_id = 1 (ourselves)
-        out += struct.pack(">i", len(names))
-        for t in names:
-            err = ERR_NONE if t in known else ERR_UNKNOWN_TOPIC
-            out += struct.pack(">h", err) + _s(t) + b"\x00"  # not internal
-            out += struct.pack(">i", 0)  # no partition metadata
-        return out
-
-    def _create(self, srv, body):
-        (n,) = struct.unpack(">i", body[:4])
-        assert n == 1
-        (ln,) = struct.unpack(">h", body[4:6])
-        topic = body[6 : 6 + ln].decode()
-        with srv.lock:
-            err = ERR_TOPIC_ALREADY_EXISTS if topic in srv.topics else ERR_NONE
-            srv.topics.add(topic)
-        return struct.pack(">i", 1) + _s(topic) + struct.pack(">h", err)
-
-    def _delete(self, srv, body):
-        (n,) = struct.unpack(">i", body[:4])
-        assert n == 1
-        (ln,) = struct.unpack(">h", body[4:6])
-        topic = body[6 : 6 + ln].decode()
-        with srv.lock:
-            err = ERR_NONE if topic in srv.topics else ERR_UNKNOWN_TOPIC
-            srv.topics.discard(topic)
-        return struct.pack(">i", 1) + _s(topic) + struct.pack(">h", err)
-
-
-@pytest.fixture()
-def broker():
-    srv = _FakeBroker()
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield srv
-    srv.shutdown()
-    srv.server_close()
 
 
 def test_controller_discovery(broker):
@@ -152,6 +36,17 @@ def test_reference_topic_setup_flow(broker):
     assert ensure_topic(broker.addr, "test-topic") == "created"
     assert topic_exists(broker.addr, "test-topic")
     assert ensure_topic(broker.addr, "test-topic") == "exists"  # tolerated
+
+
+def test_created_partitions_are_visible_to_the_data_plane(broker):
+    """CreateTopics' partition count comes back through the one
+    Metadata parser the data plane also reads."""
+    from flink_kakfa_spark.streaming.dataplane import partition_ids
+
+    assert ensure_topic(broker.addr, "wide", num_partitions=3) == "created"
+    assert partition_ids(broker.addr, "wide") == [0, 1, 2]
+    with pytest.raises(TopicAdminError, match="error 3"):
+        partition_ids(broker.addr, "never-created")
 
 
 def test_delete_roundtrip(broker):
