@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+A driver runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row-count + schema +
+order-insensitive value-hash); ``tools/diffcheck.py`` runs the same
+check over the whole registry.
 
 All real logic lives in the ``flink_kakfa_spark`` package; this file
 just re-exports its registry (see flink_kakfa_spark/registry.py).

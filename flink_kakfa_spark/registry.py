@@ -34,15 +34,6 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 # Modules that register queries on import.
-#
-# ORDER MATTERS: the driver's correctness harness checks the first 50
-# registered names, so the LLM-pipeline modules (dedup, similarity,
-# text, multimodal, sql_surface) register immediately after wordcount
-# to guarantee every one of their queries gets a driver CORRECTNESS
-# row. The relational/join/window/scalar modules — all driver-verified
-# green in earlier rounds — register afterwards and remain covered by
-# tools/diffcheck.py (same row-count + schema + value-hash check, run
-# locally over the full registry).
 _QUERY_MODULES = [
     "flink_kakfa_spark.operators.wordcount",
     "flink_kakfa_spark.operators.dedup",
@@ -82,131 +73,6 @@ _QUERY_MODULES = [
     "flink_kakfa_spark.operators.skyline",
 ]
 
-# ROUND-11 WINDOW ROTATION (executes the round-11 plan written here
-# in round 10): the driver verifies only the FIRST 50 registered names,
-# so these queries are pulled to the front of the registry regardless
-# of module order. Pure oldest-evidence refresh: the r6-evidence block
-# verbatim (exactly 50 names, the _NEXT_WINDOW_PLAN constant round 10
-# pinned — no backfill needed) — after this window the oldest driver
-# evidence anywhere is r7. Everything pushed behind the window is
-# green in r1-r10 driver history AND re-verified every round by
-# tools/diffcheck.py. Update tests/test_000_smoke.py::DRIVER_WINDOW in
-# the same commit as any change here.
-_WINDOW_FRONT = [
-    "agg_corr_covar",
-    "attribution_last_touch",
-    "cdc_apply_changelog",
-    "cohort_weekly_retention",
-    "constraint_check_summary",
-    "corpus_dataset_card",
-    "dedup_semdedup",
-    "feature_target_encode",
-    "growth_mom_revenue",
-    "join_bloom_filtered_revenue",
-    "join_null_safe_props",
-    "join_salted_skew_revenue",
-    "lake_zorder_layout",
-    "markov_event_transitions",
-    "merge_scd2_orders",
-    "mm_audio_vad_features",
-    "mm_image_ahash_groups",
-    "pipeline_curriculum_order",
-    "pipeline_shuffle_shards",
-    "pipeline_train_split",
-    "privacy_k_anonymity",
-    "profile_equidepth_price",
-    "profile_join_key_skew",
-    "profile_orders_columns",
-    "rag_bm25_topk",
-    "rolling_wau_7d",
-    "rolling_wau_hll",
-    "sample_weighted_topk",
-    "setop_all_variants",
-    "sim_pq_adc_topk",
-    "sketch_cms_heavy_hitters",
-    "sql_explode_outer_keep_empty",
-    "streak_longest_purchase_days",
-    "text_bigram_perplexity",
-    "text_bpe_merge_pairs",
-    "text_char_entropy",
-    "text_hashing_trick",
-    "text_winnow_fingerprints",
-    "tpch_q11_important_stock",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q20_potential_promotion",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q6_forecast_revenue",
-    "tpch_q9_product_type_profit",
-    "trend_slope_per_type",
-    "ts_ewma_event_value",
-    "window_first_last_nth",
-]
-
-# ROUND-12 ROTATION PLAN (write of record, same protocol as the
-# r10->r11 handoff this file just executed). After the r11 window
-# lands, the oldest driver evidence anywhere is the r7 block — exactly
-# 50 names (the CORRECTNESS_r07.json key set; its one r7 hash miss,
-# corpus_dsir_weights, was fixed and driver-green in r8), so the
-# round-12 window IS this plan (no backfill needed). This is a REAL
-# constant (not a comment) so tests can assert every name exists — a
-# typo here fails CI this round, not next round. Update
-# tests/test_000_smoke.py::DRIVER_WINDOW in the same commit.
-_NEXT_WINDOW_PLAN = [
-    "ab_test_proportions",
-    "agg_hist_quantile_rollup",
-    "anomaly_mad_events",
-    "asof_next_purchase",
-    "basket_association_rules",
-    "corpus_dsir_weights",
-    "decontam_embedding",
-    "decontam_minhash",
-    "dedup_incremental_ingest",
-    "dedup_lsh_band_stats",
-    "dedup_substring_runs",
-    "dedup_survivor_selection",
-    "emb_covariance_stats",
-    "emb_dim_variance_top",
-    "emb_hard_negatives",
-    "emb_jl_projection_quality",
-    "emb_kmeans_portable",
-    "emb_power_iteration_top",
-    "eval_langid_metrics",
-    "eval_retrieval_metrics",
-    "graph_adamic_adar_top20",
-    "graph_degree_stats",
-    "graph_neighbor_jaccard_top20",
-    "graph_pagerank_top20",
-    "graph_triangle_count",
-    "imv_signed_delta_agg",
-    "lake_compaction_plan",
-    "merge_scd3_orders",
-    "mm_audio_resample_stats",
-    "mm_image_resize_thumb",
-    "pareto_frontier_parts",
-    "pipeline_kfold_assignment",
-    "prep_winsorize_values",
-    "privacy_l_diversity",
-    "quality_code_detector",
-    "rag_bm25_multiquery_topk",
-    "sample_neyman_allocation",
-    "search_trigram_parts",
-    "sketch_kmv_distinct_rollup",
-    "sketch_kmv_set_overlap",
-    "sketch_theta_difference",
-    "text_encoding_qa",
-    "text_js_divergence_sources",
-    "text_keyphrase_rake",
-    "text_ngram_coverage",
-    "text_tokenizer_fertility",
-    "text_winnow_guarded",
-    "ts_cusum_changepoint",
-    "ts_dow_seasonality",
-    "ts_rolling_1h_value",
-]
-
 # The CLOSED set of builders that run a driver-side eager action
 # (DataFrame.collect / DataFrame.count) at CONSTRUCTION time. Each is
 # a bounded scalar or k-row relation feeding an adaptive physical
@@ -232,17 +98,6 @@ EAGER_BUILD_QUERIES = {
     # BPE training is an inherently iterative driver loop
     "text_bpe_train_merges",
     "text_bpe_tokenize",
-}
-
-# Queries registered WITHOUT oracle SQL (rows-only driver check, by
-# design — engine-seeded algorithms). Their oracle-exact portable
-# twins (dedup_minhash_portable, sim_ivf_portable_topk) carry the
-# correctness evidence, so these must never burn a scarce driver
-# window slot on an `err: no_oracle` row: pin them to the very end.
-_WINDOW_BACK = {
-    "dedup_minhash_lsh",
-    "sim_ivf_kmeans_topk",
-    "quality_compression_ratio",  # zlib — python-oracle pytest
 }
 
 _loaded = False
@@ -311,15 +166,8 @@ def _render_doc_constants(fn: QueryFn) -> None:
 
 
 def load_all() -> None:
-    """Import every operator module so its @query decorators run.
-
-    Registration order is load-bearing (the driver verifies the first
-    50 names), so after importing, QUERIES is reordered to canonical
-    ``_QUERY_MODULES`` order. Without this, any direct import of an
-    operator module before ``load_all()`` (e.g. a test module imported
-    during pytest collection) would push that module's queries to the
-    front of the dict.
-    """
+    """Import every operator module so its @query decorators run, then
+    render the doc constants of every registered query."""
     global _loaded
     if _loaded:
         return
@@ -327,28 +175,6 @@ def load_all() -> None:
         importlib.import_module(mod)
     for fn in QUERIES.values():  # after ALL imports: late constants resolve
         _render_doc_constants(fn)
-    front = {name: i for i, name in enumerate(_WINDOW_FRONT)}
-    missing = set(front) - set(QUERIES)
-    if missing:  # a rename/removal must update _WINDOW_FRONT too
-        raise RuntimeError(f"_WINDOW_FRONT names not registered: {sorted(missing)}")
-    plan_missing = set(_NEXT_WINDOW_PLAN) - set(QUERIES)
-    if plan_missing:  # a typo in next round's rotation plan fails NOW
-        raise RuntimeError(
-            f"_NEXT_WINDOW_PLAN names not registered: {sorted(plan_missing)}"
-        )
-    rank = {mod: i for i, mod in enumerate(_QUERY_MODULES)}
-    ordered = sorted(
-        enumerate(QUERIES.items()),
-        key=lambda e: (
-            e[1][0] in _WINDOW_BACK,
-            front.get(e[1][0], len(front)),
-            rank.get(e[1][1].__module__, len(rank)),
-            e[0],
-        ),
-    )
-    reordered = {name: fn for _, (name, fn) in ordered}
-    QUERIES.clear()
-    QUERIES.update(reordered)
     _loaded = True
 
 

@@ -3,18 +3,11 @@ other test module).
 
 Round 3 shipped a snapshot commit whose last-minute refactor left a
 syntax error in one operator module; because the registry imports every
-module, that single error emptied CORRECTNESS_r03.json, crashed
-bench.py, and cascaded 27 test failures. This module makes that
-structurally impossible to miss: it parses every source file and loads
-the full registry without needing a SparkSession, so it runs in
-milliseconds and fails loudly on any import-time breakage.
-
-It also pins the driver-verification window: the external correctness
-harness checks only the FIRST 50 registered query names, so
-registration order is load-bearing (registry.py module list). The
-explicit list below turns that invariant from a comment into a failing
-test — adding a query to an early module now trips the assertion
-instead of silently evicting a later query from verification.
+module, that single error emptied the registry and cascaded 27 test
+failures. This module makes that structurally impossible to miss: it
+parses every source file and loads the full registry without needing a
+SparkSession, so it runs in milliseconds and fails loudly on any
+import-time breakage.
 """
 
 from __future__ import annotations
@@ -25,79 +18,17 @@ import pathlib
 REPO = pathlib.Path(__file__).resolve().parent.parent
 PKG = REPO / "flink_kakfa_spark"
 
-# The curated driver-verification window (first 50 registered names).
-# Rounds 1-2 spent the window on the relational block; round 4 the
-# LLM-pipeline block; round 5 the scalar tail; rounds 6-7 the
-# zero-driver-evidence backlog; round 8 the last never-checked names;
-# rounds 9-11 the rolling oldest-evidence refresh (r2/r4, then r5,
-# now the r6 block — round 10's _NEXT_WINDOW_PLAN verbatim, exactly
-# 50 names). After this window the oldest evidence anywhere is r7,
-# which is the new _NEXT_WINDOW_PLAN verbatim.
-# Rotate DELIBERATELY (update this list + registry._WINDOW_FRONT
-# together); never by accident.
-DRIVER_WINDOW = [
-    "agg_corr_covar",
-    "attribution_last_touch",
-    "cdc_apply_changelog",
-    "cohort_weekly_retention",
-    "constraint_check_summary",
-    "corpus_dataset_card",
-    "dedup_semdedup",
-    "feature_target_encode",
-    "growth_mom_revenue",
-    "join_bloom_filtered_revenue",
-    "join_null_safe_props",
-    "join_salted_skew_revenue",
-    "lake_zorder_layout",
-    "markov_event_transitions",
-    "merge_scd2_orders",
-    "mm_audio_vad_features",
-    "mm_image_ahash_groups",
-    "pipeline_curriculum_order",
-    "pipeline_shuffle_shards",
-    "pipeline_train_split",
-    "privacy_k_anonymity",
-    "profile_equidepth_price",
-    "profile_join_key_skew",
-    "profile_orders_columns",
-    "rag_bm25_topk",
-    "rolling_wau_7d",
-    "rolling_wau_hll",
-    "sample_weighted_topk",
-    "setop_all_variants",
-    "sim_pq_adc_topk",
-    "sketch_cms_heavy_hitters",
-    "sql_explode_outer_keep_empty",
-    "streak_longest_purchase_days",
-    "text_bigram_perplexity",
-    "text_bpe_merge_pairs",
-    "text_char_entropy",
-    "text_hashing_trick",
-    "text_winnow_fingerprints",
-    "tpch_q11_important_stock",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q20_potential_promotion",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q6_forecast_revenue",
-    "tpch_q9_product_type_profit",
-    "trend_slope_per_type",
-    "ts_ewma_event_value",
-    "window_first_last_nth",
-]
-
 
 def test_every_source_file_parses():
-    """ast.parse every .py in the package + entry points: a syntax
-    error anywhere fails here in <1s, before any Spark test runs."""
+    """ast.parse every .py in the package, the scripts and the entry
+    point: a syntax error anywhere fails here in <1s, before any Spark
+    test runs."""
     failures = []
-    files = sorted(PKG.rglob("*.py")) + [
+    files = [
+        *sorted(PKG.rglob("*.py")),
+        *sorted((REPO / "tools").glob("*.py")),
+        *sorted((REPO / "perfbench").glob("*.py")),
         REPO / "__spark_entry__.py",
-        REPO / "bench.py",
-        REPO / "tools" / "diffcheck.py",
-        REPO / "tools" / "plan_audit.py",
     ]
     for path in files:
         try:
@@ -128,32 +59,34 @@ def test_registry_loads_all_queries():
     }, f"queries without oracle SQL: {sorted(missing_oracles)}"
 
 
-def test_driver_window_is_pinned():
-    """The first 50 registered names ARE the driver-verified window."""
-    from flink_kakfa_spark import registry
+def test_no_source_file_hard_codes_a_checkout_path():
+    """Code locates the checkout from ``__file__``. An absolute path
+    literal that points into a checkout of this project (a directory
+    holding flink_kakfa_spark/registry.py) makes a copy of the tree
+    load, test or write another tree's files."""
 
-    registry.load_all()
-    first50 = list(registry.QUERIES)[:50]
-    assert first50 == DRIVER_WINDOW, (
-        "driver-verification window drifted; if intentional, update "
-        "DRIVER_WINDOW in tests/test_000_smoke.py in the same commit.\n"
-        f"got:      {first50}\n"
-        f"expected: {DRIVER_WINDOW}"
-    )
+    def in_a_checkout(literal: str) -> bool:
+        path = pathlib.Path(literal)
+        return any(
+            (p / "flink_kakfa_spark" / "registry.py").is_file()
+            for p in (path, *path.parents)
+        )
 
-
-def test_next_window_plan_names_exist():
-    """Every name in next round's rotation plan must be a registered
-    query, and disjoint from the current window — a typo or rename in
-    the plan fails CI this round, not when the rotation executes."""
-    from flink_kakfa_spark import registry
-
-    registry.load_all()
-    unknown = set(registry._NEXT_WINDOW_PLAN) - set(registry.QUERIES)
-    assert not unknown, f"_NEXT_WINDOW_PLAN names not registered: {sorted(unknown)}"
-    dupes = set(registry._NEXT_WINDOW_PLAN) & set(DRIVER_WINDOW)
-    assert not dupes, f"plan overlaps current window: {sorted(dupes)}"
-    assert len(set(registry._NEXT_WINDOW_PLAN)) == len(registry._NEXT_WINDOW_PLAN)
+    files = [
+        *REPO.glob("*.py"),
+        *(p for top in ("flink_kakfa_spark", "tests", "tools", "perfbench")
+          for p in (REPO / top).rglob("*.py")),
+    ]
+    offenders = [
+        f"{path.relative_to(REPO)}:{node.lineno}: {node.value!r}"
+        for path in sorted(files)
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith("/")
+        and in_a_checkout(node.value)
+    ]
+    assert not offenders, "hard-coded checkout path at:\n" + "\n".join(offenders)
 
 
 def test_entry_module_exposes_driver_contract():

@@ -3,12 +3,15 @@
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from flink_kakfa_spark.cli import main
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
 def _write_msgs(spark, path, rows):
@@ -66,7 +69,7 @@ def test_producer_console_smoke(tmp_path):
     proc = subprocess.run(
         [sys.executable, "-m", "flink_kakfa_spark", "producer",
          "--config", str(cfg), "--sink", "console", "--duration", "10"],
-        cwd="/root/repo", capture_output=True, text=True, timeout=180,
+        cwd=REPO, capture_output=True, text=True, timeout=180,
         env={**__import__("os").environ, "SPARK_GRAFT_CPUS": "4",
              "SPARK_GRAFT_DRIVER_MEM": "2g"},
     )
@@ -83,7 +86,7 @@ def test_consumer_reads_dir_source(spark, tmp_path):
     proc = subprocess.run(
         [sys.executable, "-m", "flink_kakfa_spark", "consumer",
          "--source", f"dir:{src}", "--duration", "10"],
-        cwd="/root/repo", capture_output=True, text=True, timeout=180,
+        cwd=REPO, capture_output=True, text=True, timeout=180,
         env={**__import__("os").environ, "SPARK_GRAFT_CPUS": "4",
              "SPARK_GRAFT_DRIVER_MEM": "2g"},
     )

@@ -3,12 +3,14 @@
 from __future__ import annotations
 
 import importlib.util
+import pathlib
 import sys
 
 
 def _load_entry():
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__",
+        pathlib.Path(__file__).resolve().parent.parent / "__spark_entry__.py",
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["__spark_entry__"] = mod

@@ -4,6 +4,8 @@ co-located joins, CSV/JSON round-trips.
 
 from __future__ import annotations
 
+import pathlib
+
 from pyspark.sql import functions as F
 
 from flink_kakfa_spark.sources.io import (
@@ -13,6 +15,8 @@ from flink_kakfa_spark.sources.io import (
     write_partitioned,
 )
 from flink_kakfa_spark.sources.tables import load_table
+
+TOOLS = str(pathlib.Path(__file__).resolve().parent.parent / "tools")
 
 
 def test_partitioned_write_prunes_directories(spark, sf_dir, tmp_path):
@@ -149,7 +153,7 @@ def test_pyfiles_zip_is_importable_and_deterministic(tmp_path):
     import subprocess
     import sys
 
-    sys.path.insert(0, "/root/repo/tools") if "/root/repo/tools" not in sys.path else None
+    sys.path.insert(0, TOOLS) if TOOLS not in sys.path else None
     from package_pyfiles import build
 
     z1, z2 = str(tmp_path / "a.zip"), str(tmp_path / "b.zip")

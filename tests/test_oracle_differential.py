@@ -14,6 +14,8 @@ tolerance accumulation) only surface with enough rows.
 
 from __future__ import annotations
 
+import pathlib
+
 import pytest
 
 from flink_kakfa_spark import registry
@@ -21,6 +23,7 @@ from flink_kakfa_spark import registry
 registry.load_all()
 
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
+REPO = str(pathlib.Path(__file__).resolve().parent.parent)
 
 
 @pytest.fixture(scope="module")
@@ -35,7 +38,7 @@ def oracle_spark():
 def duck(oracle_spark):
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.diffcheck import duck_con
 
     return duck_con(ORACLE_SF_DIR)
@@ -46,7 +49,7 @@ def duck(oracle_spark):
 def test_query_matches_oracle(name, oracle_spark, duck):
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.diffcheck import compare
 
     ok, msg = compare(name, oracle_spark, duck, ORACLE_SF_DIR)
@@ -60,7 +63,7 @@ def test_comparator_is_hash_faithful_on_signed_zero():
     corpus_dsir_weights r7 escape). Plain floats stay tolerant."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.diffcheck import values_match
 
     assert not values_match(-0.0, 0.0)

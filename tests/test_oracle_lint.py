@@ -2,11 +2,11 @@
 carry a driver-canonicalizer hash trap (HUGEINT oracle columns,
 list/struct/map output, Spark decimal output, column-name mismatch).
 
-Round 4 lost 4 of 50 driver window slots to these artifacts despite
-bit-identical values; the first lint run then caught 3 MORE queries
-(scalar_json_extract, emb_centroid_purity, pii_scan_stats) that were
-about to rotate into the round-5 window with the same trap. Keeping
-this green means a window slot can only fail on a real wrong answer.
+Round 4 lost 4 oracle checks to these artifacts despite bit-identical
+values; the first lint run then caught 3 MORE queries
+(scalar_json_extract, emb_centroid_purity, pii_scan_stats) with the
+same trap. Keeping this green means an oracle check can only fail on a
+real wrong answer.
 """
 
 from __future__ import annotations

@@ -8,11 +8,12 @@ engines — exactly the bug class this caught on introduction."""
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent / "tools"))
 
 from flink_kakfa_spark import registry  # noqa: E402
 

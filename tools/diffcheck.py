@@ -9,13 +9,14 @@ floats). Run:  python tools/diffcheck.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_kakfa_spark import registry
 from flink_kakfa_spark.session import get_spark

@@ -1,7 +1,7 @@
 """Oracle/driver-canonicalizer lint: catch hash-trap dtypes BEFORE a
-query burns a driver CORRECTNESS window slot on a harness artifact.
+query fails its oracle check on a harness artifact.
 
-Round 4 lost 4 window slots to exactly these (VERDICT.md r4 "What's
+Round 4 lost 4 oracle checks to exactly these (VERDICT.md r4 "What's
 wrong"): DuckDB `SUM(BIGINT)` silently widens to HUGEINT (int128),
 which pandas renders as object/float and the driver's value-hash then
 disagrees with Spark's int64 even though the values are identical; and

@@ -21,10 +21,12 @@ Checks per query:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from flink_kakfa_spark import registry
 from flink_kakfa_spark.session import get_spark
@@ -365,7 +367,7 @@ def main() -> int:
             f"{'y' if r['quadratic'] else ''} | {'y' if r['python'] else ''} | "
             f"{', '.join(r['flags'])} |"
         )
-    with open("/root/repo/PLAN_AUDIT.md", "w") as f:
+    with open(os.path.join(REPO, "PLAN_AUDIT.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines[-min(len(rows), 10):]))
     print(f"\nflagged: {[r['name'] for r in flagged]}")
