@@ -20,10 +20,10 @@ Semantics deltas vs the reference, by design:
 Jar-free alternative: when the connector jar is unobtainable
 (``connector_available`` is the one probe for it), the stdlib data
 plane (``wire.py`` + ``dataplane.py``) provides executable
-produce/consume — distributed per-partition fetch via
-``mapInPandas``, Produce v3 RecordBatch writes, and a
-``foreachBatch`` streaming sink — verified against the wire-protocol
-broker stand-in in ``tests/conftest.py``.
+produce/consume — a driver-side per-partition fetch into a frame,
+Produce v3 RecordBatch writes, and a ``foreachBatch`` streaming
+sink — verified against the wire-protocol broker stand-in in
+``tests/conftest.py``.
 """
 
 from __future__ import annotations

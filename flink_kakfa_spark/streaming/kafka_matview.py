@@ -58,6 +58,11 @@ def _write_commit_atomic(state_dir: str, commit: dict) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.rename(tmp, path)  # atomic on POSIX: the commit point
+    fd = os.open(state_dir, os.O_RDONLY)
+    try:
+        os.fsync(fd)  # the rename is durable only once its directory is
+    finally:
+        os.close(fd)
 
 
 def current_counts(spark: SparkSession, state_dir: str) -> DataFrame | None:

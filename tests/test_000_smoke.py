@@ -160,9 +160,11 @@ def test_benchmark_import_surface_exists():
 
 def test_kafka_increment_reads_through_its_module_name():
     """The benchmark's traced run times the fetch by patching
-    kafka_matview.read_topic_incremental, so the increment must look
-    that name up in its module when it runs."""
+    kafka_matview.read_topic_incremental and wrapping ``df.count`` on
+    the frame it returns, so the increment must look that name up in
+    its module when it runs and must call ``count`` on the frame."""
     from flink_kakfa_spark.streaming import kafka_matview
 
     code = kafka_matview.consume_wordcount_increment.__code__
     assert "read_topic_incremental" in code.co_names
+    assert "count" in code.co_names

@@ -1,5 +1,5 @@
 """S2/S3 data-plane tests: RecordBatch codec, Produce/Fetch/ListOffsets
-RPCs, and the distributed Spark read/write paths — all against the
+RPCs, and the driver-side Spark read/write paths — all against the
 in-process broker stand-in speaking spec frames over real TCP
 (``broker`` fixture, tests/conftest.py, shared with test_topics.py).
 
@@ -173,6 +173,20 @@ def test_spark_write_topic_round_robin(spark, broker):
     assert {r["partition"] for r in back} == {0, 1}
 
 
+def test_write_topic_spreads_a_local_frame_over_every_partition(spark, broker):
+    """A pandas-created frame is one input partition; its records must
+    still spread round-robin over every Kafka partition, not land on 0."""
+    import pandas as pd
+
+    from flink_kakfa_spark.streaming.dataplane import write_topic
+
+    broker.add_topic("spread", 4)
+    df = spark.createDataFrame(pd.DataFrame({"value": [f"m{i}" for i in range(8)]}))
+    assert write_topic(df, broker.addr, "spread") == 8
+    ends = [list_offset(broker.addr, "spread", p, LATEST) for p in range(4)]
+    assert ends == [2, 2, 2, 2]
+
+
 def test_kafka_wordcount_round_trip(spark, broker):
     """The reference's integration flow: produce sentences -> consume via
     Spark -> word count == batch word count of the same sentences
@@ -331,6 +345,21 @@ def test_incremental_read_sees_each_record_exactly_once(spark, broker):
     assert full == got1 | got2
 
 
+def test_read_topic_incremental_frame_never_refetches(spark, broker):
+    """The records are fetched during the call: once it returns, the
+    frame answers from what it holds, whatever the broker does next."""
+    from flink_kakfa_spark.streaming.dataplane import read_topic_incremental
+
+    broker.add_topic("once", 2)
+    produce(broker.addr, "once", [(None, b"a0")], 0)
+    produce(broker.addr, "once", [(None, b"a1")], 0)
+    produce(broker.addr, "once", [(None, b"b0")], 1)
+    df, _ = read_topic_incremental(spark, broker.addr, "once")
+    broker.short_fetch = True  # any fetch from here on would raise
+    assert df.count() == 3
+    assert sorted(bytes(r["value"]) for r in df.collect()) == [b"a0", b"a1", b"b0"]
+
+
 def _counts_dict(df):
     return {r["word"]: r["cnt"] for r in df.collect()}
 
@@ -433,6 +462,29 @@ def test_kafka_matview_short_read_fails_without_committing(
         "beta": 1,
         "gamma": 1,
     }
+
+
+def test_kafka_matview_commit_fsyncs_its_directory(tmp_path, monkeypatch):
+    """The commit rename survives a power loss only once the directory
+    holding it is fsynced, not just the renamed file."""
+    import os
+    import stat
+
+    from flink_kakfa_spark.streaming import kafka_matview
+
+    synced_dirs = []
+    fsync = os.fsync
+
+    def recording_fsync(fd):
+        synced_dirs.append(stat.S_ISDIR(os.fstat(fd).st_mode))
+        fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    kafka_matview._write_commit_atomic(
+        str(tmp_path), {"version": 1, "offsets": {"0": 1}}
+    )
+    assert any(synced_dirs)
+    assert kafka_matview._read_commit(str(tmp_path))["version"] == 1
 
 
 def test_record_batch_roundtrip_property():

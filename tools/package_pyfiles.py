@@ -10,9 +10,9 @@ ships as a zip on every job:
 The archive contains only the package sources (no tests, no caches,
 deterministic member order and zeroed timestamps, so re-builds of the
 same tree are byte-identical — a content-addressable artifact for CI
-caches). With the zip on ``--py-files``, the sys.path-capturing
-closures in ``streaming/dataplane.py`` and the mapInPandas operators
-resolve imports on executors without the repo checkout.
+caches). With the zip on ``--py-files``, the closures the mapInPandas
+operators capture resolve imports on executors without the repo
+checkout.
 """
 
 from __future__ import annotations
