@@ -1046,9 +1046,9 @@ def q_rag_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from flink_kakfa_spark.operators.mlprep import _MD5_32_SQL, _md5_32
+from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
 
-_AB_ARM_SQL = f"(({_MD5_32_SQL.format(x='CAST(user_id AS VARCHAR)')}) % 2)"
+_AB_ARM_SQL = f"(({sql_md5_prefix('CAST(user_id AS VARCHAR)')}) % 2)"
 
 
 @query(
@@ -1131,7 +1131,7 @@ def q_ab_test_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("np").cast("long").alias("sum_np"),
     )
     pu = per_user.crossJoin(F.broadcast(tot)).select(
-        (_md5_32(F.col("user_id").cast("string")) % 2).alias("arm"),
+        (md5_prefix(F.col("user_id").cast("string")) % 2).alias("arm"),
         (F.col("np") * F.col("n_users") > F.col("sum_np"))
         .cast("int")
         .alias("converted"),

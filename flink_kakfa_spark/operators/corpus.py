@@ -21,10 +21,11 @@ Scale notes (100 TB):
 - Mixture math routes double sums through DECIMAL so any partitioning
   of the sum yields identical bits (decimal addition is associative);
   sqrt (exact per IEEE-754, unlike pow/log) is the temperature knob.
-- Temperature sampling keys on a portable md5-derived uniform, so the
-  sampled SET is deterministic across engines, partitionings, and
-  retries — a replayed 100 TB sampling job re-selects byte-identical
-  training data (critical for reproducible training runs).
+- Temperature sampling keys on the portable md5 uniform
+  (functions/hashing.py), so the sampled SET is deterministic across
+  engines, partitionings, and retries — a replayed 100 TB sampling job
+  re-selects byte-identical training data (critical for reproducible
+  training runs).
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_kakfa_spark.functions.hashing import md5_uniform, sql_md5_uniform
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table
 
@@ -39,27 +41,6 @@ from flink_kakfa_spark.sources.tables import load_table
 # both engines; pow() drifts by ulps between libm implementations).
 SAMPLE_BUDGET_FRACTION = 0.5  # target corpus size after mixing
 
-
-def _portable_uniform(col):
-    """Deterministic uniform in [0,1) from md5's first 8 hex chars —
-    identical bits in Spark and DuckDB (see dedup/minhash portable)."""
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast(
-        "double"
-    ) / F.lit(4294967296.0)
-
-
-_SQL_UNIFORM = """
-      CAST((
-        (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 268435456.0 +
-        (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 16777216.0 +
-        (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 1048576.0 +
-        (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) * 65536.0 +
-        (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 5, 1)) - 1) * 4096.0 +
-        (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 6, 1)) - 1) * 256.0 +
-        (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 7, 1)) - 1) * 16.0 +
-        (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 8, 1)) - 1)
-      ) / 4294967296.0 AS DOUBLE)
-"""
 
 # Shared mixture-rate CTE (DuckDB): per-source sqrt-count weights and
 # the resulting per-source keep rate. Decimal sums keep the weight
@@ -169,7 +150,7 @@ def q_corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     + f"""
     SELECT d.doc_id, d.source, d.lang, d.n_chars
     FROM documents d JOIN rates r ON d.source = r.source
-    WHERE {_SQL_UNIFORM} < r.sample_rate
+    WHERE {sql_md5_uniform('doc_id')} < r.sample_rate
     """,
 )
 def q_corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,7 +168,7 @@ def q_corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = _mixture_rates(d).select("source", "sample_rate")
     return (
         d.join(F.broadcast(rates), "source")
-        .filter(_portable_uniform(F.col("doc_id")) < F.col("sample_rate"))
+        .filter(md5_uniform(F.col("doc_id")) < F.col("sample_rate"))
         .select("doc_id", "source", "lang", "n_chars")
     )
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
@@ -222,7 +223,6 @@ from flink_kakfa_spark.operators.dedup import (  # noqa: E402
     _MH_PERMS,
     _MH_ROWS,
     _mh_ab,
-    _MH_H_SQL,
     _MH_SIG_SQL,
     SHINGLE_K,
 )
@@ -253,7 +253,7 @@ _XBAND_JOINS = " OR ".join(
     ),
     hashed AS (
       SELECT doc_id, sharr,
-             list_transform(sharr, s -> CAST({_MH_H_SQL} AS BIGINT)) AS hl
+             list_transform(sharr, s -> CAST({sql_md5_prefix('s')} AS BIGINT)) AS hl
       FROM sh
     ),
     sigs AS (
@@ -307,8 +307,7 @@ def q_decontam_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("sharr"),
     )
-    h32 = lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")  # noqa: E731
-    hashed = sh.withColumn("hl", F.transform("sharr", h32))
+    hashed = sh.withColumn("hl", F.transform("sharr", lambda s: md5_prefix(s)))
 
     def perm_min(p: int):
         a, b = _mh_ab(p)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
@@ -350,11 +351,11 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Portable MinHash: 16 affine permutations over md5-derived 32-bit
-# shingle hashes, banded 4x4. Every constant is a literal below so the
-# Spark expressions and the DuckDB oracle compute bit-identical
-# signatures — this is the oracle-checkable twin of the (engine-seeded)
-# pyspark.ml MinHashLSH query above it.
+# Portable MinHash: 16 affine permutations over the 32-bit md5-prefix
+# shingle hashes of functions/hashing.py, banded 4x4. Every constant is
+# a literal below so the Spark expressions and the DuckDB oracle compute
+# bit-identical signatures — this is the oracle-checkable twin of the
+# (engine-seeded) pyspark.ml MinHashLSH query above it.
 _MH_PERMS = 16
 _MH_BANDS = 4
 _MH_ROWS = _MH_PERMS // _MH_BANDS
@@ -368,10 +369,6 @@ def _mh_ab(p: int) -> tuple[int, int]:
     return a, b
 
 
-_MH_H_SQL = " + ".join(
-    f"(strpos('0123456789abcdef', substr(md5(s), {k}, 1)) - 1) * {16 ** (8 - k)}"
-    for k in range(1, 9)
-)
 _MH_SIG_SQL = ",\n      ".join(
     "list_min(list_transform(hl, h -> (h * {a} + {b}) % {m})) AS s{p}".format(
         a=_mh_ab(p)[0], b=_mh_ab(p)[1], m=_MH_M, p=p
@@ -404,7 +401,7 @@ _MH_BAND_JOINS = " OR ".join(
     ),
     hashed AS (
       SELECT doc_id, sharr,
-             list_transform(sharr, s -> CAST({_MH_H_SQL} AS BIGINT)) AS hl
+             list_transform(sharr, s -> CAST({sql_md5_prefix('s')} AS BIGINT)) AS hl
       FROM sh
     ),
     sigs AS (
@@ -661,8 +658,7 @@ def _minhash_bands_from(d: DataFrame) -> DataFrame:
             ),
         ).otherwise(F.array().cast("array<string>")).alias("sharr"),
     )
-    h32 = lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")  # noqa: E731
-    hashed = sh.withColumn("hl", F.transform("sharr", h32))
+    hashed = sh.withColumn("hl", F.transform("sharr", lambda s: md5_prefix(s)))
     def perm_min(p: int):
         a, b = _mh_ab(p)
 
@@ -721,17 +717,11 @@ def _minhash_bands_from(d: DataFrame) -> DataFrame:
 
 
 # SimHash oracle: DuckDB recomputes the identical md5-derived 32-bit
-# signature (bit b = bit b%4 of the hex nibble at char 8 - b//4 of
-# md5(word)[:8]) and finds hamming<=3 pairs by brute force — an
-# independent all-pairs implementation checking the engine's banded
-# sub-quadratic one.
-_SIMHASH_BIT = (
-    "((strpos('0123456789abcdef', substr(md5(word), {pos}, 1)) - 1) >> {shift}) & 1"
-)
+# token hash (bit b of the portable md5 prefix) and finds hamming<=3
+# pairs by brute force — an independent all-pairs implementation
+# checking the engine's banded sub-quadratic one.
 _SIMHASH_VOTES = ",\n      ".join(
-    "SUM(CASE WHEN "
-    + _SIMHASH_BIT.format(pos=8 - b // 4, shift=b % 4)
-    + f" = 1 THEN 1 ELSE -1 END) AS b{b}"
+    f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
     for b in range(32)
 )
 _SIMHASH_SIG = " + ".join(
@@ -745,10 +735,14 @@ _SIMHASH_SIG = " + ".join(
     WITH tok AS (
       SELECT doc_id, UNNEST(string_split(text, ' ')) AS word FROM documents
     ),
+    hashed AS (
+      SELECT doc_id, CAST({sql_md5_prefix('word')} AS BIGINT) AS h
+      FROM tok WHERE word <> ''
+    ),
     votes AS (
       SELECT doc_id,
       {_SIMHASH_VOTES}
-      FROM tok WHERE word <> '' GROUP BY doc_id
+      FROM hashed GROUP BY doc_id
     ),
     sigs AS (
       SELECT doc_id, CAST({_SIMHASH_SIG} AS BIGINT) AS simhash FROM votes
@@ -803,9 +797,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rep_id").alias("doc_id"),
         F.explode(F.split(F.col("text"), " ")).alias("word"),
     ).filter(F.col("word") != "")
-    # 32-bit token hash from the first 8 hex chars of md5 — portable
-    # across engines (xxhash64 would be faster but is Spark-specific).
-    h = F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long")
+    h = md5_prefix("word")  # portable 32-bit token hash (functions/hashing.py)
     bit_votes = [
         F.sum(
             F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -2292,7 +2284,7 @@ def _band_stats_oracle() -> str:
     ),
     hashed AS (
       SELECT doc_id,
-             list_transform(sharr, s -> CAST({_MH_H_SQL} AS BIGINT)) AS hl
+             list_transform(sharr, s -> CAST({sql_md5_prefix('s')} AS BIGINT)) AS hl
       FROM sh
     ),
     sigs AS (
@@ -2359,10 +2351,7 @@ def q_dedup_lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.array().cast("array<string>"))
         .alias("sharr"),
     ).filter(F.size("sharr") > 0)
-    h32 = lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast(  # noqa: E731
-        "long"
-    )
-    hashed = sh.withColumn("hl", F.transform("sharr", h32))
+    hashed = sh.withColumn("hl", F.transform("sharr", lambda s: md5_prefix(s)))
 
     def perm_min(p: int):
         a, b = _mh_ab(p)

@@ -443,13 +443,13 @@ def _seed_window():
     return Window.orderBy("vec_id")
 
 
-from flink_kakfa_spark.operators.mlprep import _MD5_32_SQL, _md5_32
+from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
 
 _JL_M = 16  # projected dimensionality
 _JL_SCALE = 16384  # 2^14 component quantization — keeps every sum < 2^53
 
-_JL_SIGN_SQL = _MD5_32_SQL.format(
-    x="(CAST(g.i AS VARCHAR) || '_' || CAST(g.j AS VARCHAR))"
+_JL_SIGN_SQL = sql_md5_prefix(
+    "(CAST(g.i AS VARCHAR) || '_' || CAST(g.j AS VARCHAR))"
 )
 
 
@@ -538,10 +538,7 @@ def q_emb_jl_projection_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sign = lambda i, j: (  # noqa: E731
         F.when(
-            _md5_32(
-                F.concat_ws("_", i.cast("string"), j.cast("string"))
-            )
-            % 2
+            md5_prefix(F.concat_ws("_", i.cast("string"), j.cast("string"))) % 2
             == 0,
             F.lit(1),
         ).otherwise(F.lit(-1))

@@ -8,8 +8,9 @@ lake before training:
   categorical feature with the mean of the target computed on the
   OTHER k-1 folds — the standard leakage-safe encoding (each row's
   own fold is excluded, so its target never contributes to its own
-  feature). Folds are assigned by portable md5, so both engines pick
-  identical folds; target sums are exact DECIMAL.
+  feature). Folds are assigned by the portable md5 prefix
+  (functions/hashing.py), so both engines pick identical folds; target
+  sums are exact DECIMAL.
 - **k-anonymity audit** (`privacy_k_anonymity`): report
   quasi-identifier combinations identifying fewer than k individuals
   — the release gate run before publishing any user-level extract
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table
 
@@ -40,24 +42,12 @@ _FOLDS = 5
 _K_ANON = 10
 _HASH_BUCKETS = 64
 
-# portable 32-bit md5 prefix as integer — DuckDB nibble-rebuild twin
-# of Spark's conv(substring(md5(x),1,8),16,10)
-_MD5_32_SQL = " + ".join(
-    f"(strpos('0123456789abcdef', substr(md5({{x}}), {k}, 1)) - 1) * {16 ** (8 - k)}"
-    for k in range(1, 9)
-)
-
-
-def _md5_32(col):
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 @query(
     "feature_target_encode",
     oracle=f"""
     WITH o AS (
       SELECT o_orderpriority AS category,
-             CAST(({_MD5_32_SQL.format(x="CAST(o_orderkey AS VARCHAR)")})
+             CAST(({sql_md5_prefix("CAST(o_orderkey AS VARCHAR)")})
                   % {_FOLDS} AS BIGINT) AS fold,
              CAST(o_totalprice AS DECIMAL(18,2)) AS t
       FROM orders
@@ -92,7 +82,7 @@ def q_feature_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, "orders", sf_dir).select(
         F.col("o_orderpriority").alias("category"),
-        (_md5_32(F.col("o_orderkey").cast("string")) % _FOLDS).alias("fold"),
+        (md5_prefix(F.col("o_orderkey").cast("string")) % _FOLDS).alias("fold"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("t"),
     )
     g = o.groupBy("category", "fold").agg(
@@ -152,7 +142,7 @@ def q_privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents, UNNEST(string_split(text, ' ')) AS u(w)
     ),
     b AS (
-      SELECT CAST(({_MD5_32_SQL.format(x="word")}) % {_HASH_BUCKETS}
+      SELECT CAST(({sql_md5_prefix("word")}) % {_HASH_BUCKETS}
                   AS BIGINT) AS bucket,
              word
       FROM w
@@ -178,7 +168,7 @@ def q_text_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     toks = d.select(F.explode(F.split("text", " ")).alias("word"))
     return (
-        toks.withColumn("bucket", _md5_32(F.col("word")) % _HASH_BUCKETS)
+        toks.withColumn("bucket", md5_prefix(F.col("word")) % _HASH_BUCKETS)
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),

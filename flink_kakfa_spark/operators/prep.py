@@ -20,6 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_kakfa_spark.functions.hashing import (
+    md5_prefix,
+    md5_uniform,
+    sql_md5_prefix,
+    sql_md5_uniform,
+)
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table
 
@@ -250,10 +256,7 @@ _N_SHARDS = 16
     WITH hashed AS (
       SELECT doc_id,
              md5(CAST(doc_id AS VARCHAR)) AS hx,
-             (
-               (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-               + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)
-             ) % {_N_SHARDS} AS shard
+             ({sql_md5_prefix("CAST(doc_id AS VARCHAR)", 2)}) % {_N_SHARDS} AS shard
       FROM documents
     )
     SELECT doc_id,
@@ -284,9 +287,7 @@ def q_pipeline_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, "documents", sf_dir)
     hx = F.md5(F.col("doc_id").cast("string"))
-    shard = (
-        F.conv(F.substring(hx, 1, 2), 16, 10).cast("int") % _N_SHARDS
-    )
+    shard = md5_prefix(F.col("doc_id").cast("string"), 2).cast("int") % _N_SHARDS
     hashed = d.select("doc_id", hx.alias("hx"), shard.alias("shard"))
     w = W.partitionBy("shard").orderBy("hx", "doc_id")
     return hashed.select(
@@ -299,17 +300,13 @@ def q_pipeline_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_train_split",
-    oracle="""
+    oracle=f"""
     WITH tagged AS (
       SELECT
         n_chars,
         CASE
-          WHEN strpos('0123456789abcdef',
-                      substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 < 12
-            THEN 'train'
-          WHEN strpos('0123456789abcdef',
-                      substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 < 14
-            THEN 'val'
+          WHEN ({sql_md5_prefix("CAST(doc_id AS VARCHAR)", 1)}) < 12 THEN 'train'
+          WHEN ({sql_md5_prefix("CAST(doc_id AS VARCHAR)", 1)}) < 14 THEN 'val'
           ELSE 'test'
         END AS split
       FROM documents
@@ -335,9 +332,7 @@ def q_pipeline_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot migrate documents between splits.
     """
     d = load_table(spark, "documents", sf_dir)
-    nib = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10
-    ).cast("int")
+    nib = md5_prefix(F.col("doc_id").cast("string"), 1).cast("int")
     tagged = d.select(
         "n_chars",
         F.when(nib < 12, "train").when(nib < 14, "val").otherwise("test").alias(
@@ -361,8 +356,6 @@ def q_pipeline_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from pyspark.sql import Window as _W
 
-from flink_kakfa_spark.operators.corpus import _SQL_UNIFORM, _portable_uniform
-
 _WEIGHTED_K = 20
 # exact half-ULP-of-2^32 shift: u = (raw + 0.5) / 2^32 stays strictly
 # inside (0,1) and every term is an exact dyadic, so u is bit-identical
@@ -376,7 +369,7 @@ _HALF_STEP = 1.0 / 8589934592.0
     WITH keyed AS (
       SELECT
         doc_id, source, n_chars,
-        LN(({_SQL_UNIFORM}) + {_HALF_STEP!r}) / n_chars AS k
+        LN({sql_md5_uniform('doc_id')} + {_HALF_STEP!r}) / n_chars AS k
       FROM documents
     )
     SELECT doc_id, source, n_chars,
@@ -399,7 +392,7 @@ def q_sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is a TakeOrdered partial — no global sort at scale.
     """
     d = load_table(spark, "documents", sf_dir)
-    u = _portable_uniform(F.col("doc_id")) + F.lit(_HALF_STEP)
+    u = md5_uniform(F.col("doc_id")) + F.lit(_HALF_STEP)
     keyed = d.select(
         "doc_id",
         "source",
@@ -593,12 +586,9 @@ def q_prep_winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from flink_kakfa_spark.operators.mlprep import _MD5_32_SQL as _KF_MD5_SQL
-from flink_kakfa_spark.operators.mlprep import _md5_32 as _kf_md5
-
 _KFOLDS = 5
 _KF_KEY = "(CAST(doc_id AS VARCHAR) || '_fold')"
-_KF_SQL = "((" + _KF_MD5_SQL.format(x=_KF_KEY) + f") % {_KFOLDS})"
+_KF_SQL = "((" + sql_md5_prefix(_KF_KEY) + f") % {_KFOLDS})"
 
 
 @query(
@@ -644,7 +634,7 @@ def q_pipeline_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     tagged = d.select(
         (
-            _kf_md5(F.concat(F.col("doc_id").cast("string"), F.lit("_fold")))
+            md5_prefix(F.concat(F.col("doc_id").cast("string"), F.lit("_fold")))
             % _KFOLDS
         ).alias("fold"),
         "source",

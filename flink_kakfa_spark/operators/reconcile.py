@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.operators.mlprep import _MD5_32_SQL, _md5_32
+from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table
 
@@ -74,7 +74,7 @@ def manifest_partial(orders: DataFrame) -> DataFrame:
     return (
         orders.select(
             (F.col("o_orderkey") % _N_SHARDS).cast("long").alias("shard"),
-            _md5_32(row_str).alias("row_hash"),
+            md5_prefix(row_str).alias("row_hash"),
         )
         .groupBy("shard")
         .agg(
@@ -91,7 +91,7 @@ def manifest_partial(orders: DataFrame) -> DataFrame:
     WITH h AS (
       SELECT
         CAST(o_orderkey % {_N_SHARDS} AS BIGINT) AS shard,
-        CAST(({_MD5_32_SQL.format(x=_DUCK_ROW)}) AS BIGINT) AS row_hash
+        CAST(({sql_md5_prefix(_DUCK_ROW)}) AS BIGINT) AS row_hash
       FROM orders
     )
     SELECT

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table
 
@@ -184,25 +185,17 @@ def q_agg_approx_percentile_bounds(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # Count-min sketch geometry: 3 rows x 256 buckets, hashed from the
-# first two hex digits of md5(salt || word) — portable to any engine
-# with md5, like the MinHash permutations (operators/dedup.py:296).
+# portable 2-hex-digit md5 prefix of salt || word (functions/hashing.py).
 _CMS_DEPTH = 3
 _CMS_WIDTH = 256
 
 
 def _cms_bucket_spark(word, salt: int):
-    return (
-        F.conv(F.substring(F.md5(F.concat(F.lit(f"{salt}:"), word)), 1, 2), 16, 10)
-        .cast("int")
-    )
+    return md5_prefix(F.concat(F.lit(f"{salt}:"), word), 2).cast("int")
 
 
-def _cms_bucket_sql(salt: int) -> str:
-    h = f"md5('{salt}:' || word)"
-    return (
-        f"((strpos('0123456789abcdef', substr({h}, 1, 1)) - 1) * 16"
-        f" + (strpos('0123456789abcdef', substr({h}, 2, 1)) - 1))"
-    )
+def _cms_bucket_sql(salt: int, word: str = "word") -> str:
+    return "(" + sql_md5_prefix(f"'{salt}:' || {word}", 2) + ")"
 
 
 @query(
@@ -236,9 +229,9 @@ def _cms_bucket_sql(salt: int) -> str:
     FROM top20 t
     JOIN buckets b
       ON b.bucket = CASE b.salt
-                      WHEN 0 THEN {_cms_bucket_sql(0).replace("word", "t.word")}
-                      WHEN 1 THEN {_cms_bucket_sql(1).replace("word", "t.word")}
-                      ELSE {_cms_bucket_sql(2).replace("word", "t.word")}
+                      WHEN 0 THEN {_cms_bucket_sql(0, "t.word")}
+                      WHEN 1 THEN {_cms_bucket_sql(1, "t.word")}
+                      ELSE {_cms_bucket_sql(2, "t.word")}
                     END
     GROUP BY t.word, t.exact_cnt
     """,
@@ -457,10 +450,6 @@ def q_agg_hist_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # value-exact against the SQL oracle.
 from pyspark.sql.window import Window
 
-from flink_kakfa_spark.operators.mlprep import _MD5_32_SQL, _md5_32
-
-_kmv_md5_32 = _md5_32
-_MD5_32_SQL_KMV = _MD5_32_SQL.format(x="CAST(user_id AS VARCHAR)")
 _KMV_K = 64
 _KMV_SPACE = 1 << 32  # md5_32 hash space
 
@@ -472,7 +461,7 @@ _KMV_SPACE = 1 << 32  # md5_32 hash space
       SELECT DISTINCT
         event_type,
         CAST(ts AS DATE) AS d,
-        CAST(({_MD5_32_SQL_KMV}) AS BIGINT) AS hv
+        CAST(({sql_md5_prefix("CAST(user_id AS VARCHAR)")}) AS BIGINT) AS hv
       FROM events
     ),
     daily AS (
@@ -530,7 +519,7 @@ def q_sketch_kmv_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     report the sketch's realized error.
     """
     ev = load_table(spark, "events", sf_dir)
-    hv = _kmv_md5_32(F.col("user_id").cast("string"))
+    hv = md5_prefix(F.col("user_id").cast("string"))
     h = ev.select(
         "event_type",
         F.col("ts").cast("date").alias("d"),
@@ -577,8 +566,8 @@ def q_sketch_kmv_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMV_KEY_SQL = _MD5_32_SQL.format(
-    x="(CAST(user_id AS VARCHAR) || '_' || CAST(CAST(ts AS DATE) AS VARCHAR))"
+_KMV_KEY_SQL = sql_md5_prefix(
+    "(CAST(user_id AS VARCHAR) || '_' || CAST(CAST(ts AS DATE) AS VARCHAR))"
 )
 
 
@@ -664,7 +653,7 @@ def q_sketch_kmv_set_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_", F.col("user_id").cast("string"), F.col("ts").cast("date").cast("string")
     )
     h = ev.select(
-        "event_type", _kmv_md5_32(key).alias("hv")
+        "event_type", md5_prefix(key).alias("hv")
     ).distinct()
     # two-phase salted k-min (see _kmv_salted_kmin): the oracle takes
     # the per-type k-min directly and sees identical sketches.
@@ -940,7 +929,7 @@ def q_sketch_theta_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = F.concat_ws(
         "_", F.col("user_id").cast("string"), F.col("ts").cast("date").cast("string")
     )
-    h = ev.select("event_type", _kmv_md5_32(key).alias("hv")).distinct()
+    h = ev.select("event_type", md5_prefix(key).alias("hv")).distinct()
     km = _kmv_salted_kmin(h)
     per_type = km.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_held"), F.max("hv").alias("kth")

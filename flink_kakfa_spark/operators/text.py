@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
@@ -175,15 +176,10 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Portable token hash: the first 8 hex chars of md5 as a 32-bit int —
-# both engines compute md5 identically; DuckDB lacks conv(hex) so the
-# oracle rebuilds the value from nibbles.
+# Rolling fingerprint over the portable md5 token hash
+# (functions/hashing.py).
 _ROLL_B = 1000003          # polynomial base
 _ROLL_M = 2147483647       # 2^31-1: keeps acc*B + h inside BIGINT exactly
-_ROLL_H_SQL = " + ".join(
-    f"(strpos('0123456789abcdef', substr(md5(w), {k}, 1)) - 1) * {16 ** (8 - k)}"
-    for k in range(1, 9)
-)
 
 
 @query(
@@ -195,7 +191,7 @@ _ROLL_H_SQL = " + ".join(
         list_prepend(
           CAST(0 AS BIGINT),
           list_transform(string_split(text, ' '),
-                         w -> CAST({_ROLL_H_SQL} AS BIGINT))
+                         w -> CAST({sql_md5_prefix('w')} AS BIGINT))
         ),
         (acc, x) -> (acc * {_ROLL_B} + x) % {_ROLL_M}
       ) AS rolling_fp
@@ -213,11 +209,10 @@ def q_text_fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     as.
     """
     d = load_table(spark, "documents", sf_dir)
-    h = lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long")  # noqa: E731
     rolled = F.aggregate(
         tokens(),
         F.lit(0).cast("long"),
-        lambda acc, w: (acc * F.lit(_ROLL_B) + h(w)) % F.lit(_ROLL_M),
+        lambda acc, w: (acc * F.lit(_ROLL_B) + md5_prefix(w)) % F.lit(_ROLL_M),
     )
     return d.select("doc_id", rolled.alias("rolling_fp"))
 
@@ -478,17 +473,11 @@ def q_pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_stratified_sample",
-    oracle="""
+    oracle=f"""
     WITH hashed AS (
       SELECT
         lang,
-        (
-          (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-          + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)
-        ) * 256
-        + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-        + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)
-          AS h16,
+        {sql_md5_prefix("CAST(doc_id AS VARCHAR)", 4)} AS h16,
         CASE lang WHEN 'en' THEN 20 WHEN 'zh' THEN 50 ELSE 80 END AS pct
       FROM documents
     )
@@ -514,8 +503,7 @@ def q_pipeline_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same filter without the rollup.
     """
     d = load_table(spark, "documents", sf_dir)
-    hx = F.md5(F.col("doc_id").cast("string"))
-    h16 = F.conv(F.substring(hx, 1, 4), 16, 10).cast("long")
+    h16 = md5_prefix(F.col("doc_id").cast("string"), 4)
     pct = (
         F.when(F.col("lang") == "en", 20)
         .when(F.col("lang") == "zh", 50)

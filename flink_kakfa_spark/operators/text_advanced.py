@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.operators.text import _ROLL_B, _ROLL_H_SQL, _ROLL_M
+from flink_kakfa_spark.functions.hashing import spark_sql_md5_prefix, sql_md5_prefix
+from flink_kakfa_spark.operators.text import _ROLL_B, _ROLL_M
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table
 
@@ -43,9 +44,6 @@ _WINNOW_W = 4   # window: one fingerprint per 4 consecutive k-gram hashes
 # phase-1 mini-prefix of the adaptive top-k pair join: fingerprints
 # indexed per doc while seeding the 20th-best-score lower bound
 _WINNOW_SEED_PREFIX = 3
-
-# portable word hash (same 32-bit md5 prefix as text.py), Spark SQL form
-_H_SPARK = "cast(conv(substring(md5(w), 1, 8), 16, 10) as bigint)"
 
 
 def _winnow_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -74,7 +72,7 @@ def _winnow_fparr_from(docs: DataFrame) -> DataFrame:
     win_mins = ", ".join(f"karr[j - {o}]" for o in range(_WINNOW_W))
     fps_expr = f"""
     array_sort(array_distinct(flatten(transform(
-      array(transform(split(text, ' '), w -> {_H_SPARK})), hsv ->
+      array(transform(split(text, ' '), w -> {spark_sql_md5_prefix('w')})), hsv ->
       flatten(transform(
         array(CASE WHEN size(hsv) >= 3 THEN
           transform(sequence(0, size(hsv) - 3),
@@ -202,7 +200,7 @@ def q_text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
       SELECT doc_id,
              list_transform(string_split(text, ' '),
-                            w -> CAST({_ROLL_H_SQL} AS BIGINT)) AS hs
+                            w -> CAST({sql_md5_prefix('w')} AS BIGINT)) AS hs
       FROM documents
     ),
     kg AS (
@@ -514,7 +512,7 @@ _WINNOW_DF_CAP = 20  # fingerprints in more docs than this are boilerplate
     WITH d AS (
       SELECT doc_id,
              list_transform(string_split(text, ' '),
-                            w -> CAST({_ROLL_H_SQL} AS BIGINT)) AS hs
+                            w -> CAST({sql_md5_prefix('w')} AS BIGINT)) AS hs
       FROM documents
     ),
     kg AS (

@@ -4,8 +4,9 @@ This is the stream-processing job the reference was visibly built
 around but never implemented — its consumer reads topic
 ``word-count-output`` (``go/consumer/consumer.go:13``) and its producer
 emits space-joined sentences (``go/producer/producer.go:127-138``).
-Batch form here; the streaming twin lives in
-``flink_kakfa_spark.streaming.wordcount``.
+Batch form here; ``word_counts`` itself lives in
+``flink_kakfa_spark.streaming.wordcount``, shared with the streaming
+job and the Kafka materialized view.
 
 Tokenizer contract: split on a single space — the exact inverse of the
 reference's ``strings.Join(words, " ")`` (``go/producer/producer.go:137``).
@@ -25,16 +26,7 @@ from pyspark.sql import functions as F
 
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table
-
-
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """split → explode → drop empties → groupBy(word).count()."""
-    return (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+from flink_kakfa_spark.streaming.wordcount import word_counts
 
 
 @query(

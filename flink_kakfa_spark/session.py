@@ -13,7 +13,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _quarter_of_ram() -> str:
+    """A quarter of physical memory, at least 1 GiB, as a JVM size."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(total // 4 >> 20, 1024)}m"
 
 
 def get_spark(
@@ -30,9 +34,11 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Local mode defaults to a 1g driver heap regardless of machine RAM —
-    # in local[32] the "driver" heap IS all executor memory, so size it
-    # to the machine (effective only for the process's first session).
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    # in local mode the "driver" heap IS all executor memory, so size it
+    # to the machine: a quarter of RAM, leaving room for the Python
+    # workers and the page cache (effective only for the process's first
+    # session).
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _quarter_of_ram()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -48,7 +54,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # Keep the UI off in the harness; it only costs startup time here.
         .config("spark.ui.enabled", "false")

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_kakfa_spark.streaming.dataplane import read_topic_incremental
+from flink_kakfa_spark.streaming.wordcount import word_counts
 
 _COMMIT = "commit.json"
 
@@ -87,13 +88,7 @@ def consume_wordcount_increment(
     if new_rows == 0:
         return {**commit, "new_rows": 0}
 
-    inc = (
-        df.select(F.col("value").cast("string").alias("line"))
-        .select(F.explode(F.split("line", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    inc = word_counts(df, F.col("value").cast("string"))
     prev = current_counts(spark, state_dir)
     merged = (
         inc

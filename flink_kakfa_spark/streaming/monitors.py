@@ -354,11 +354,8 @@ def read_cms_estimates(
 # every event ever streamed, with <= k rows per event_type per batch of
 # state — the same KB-scale invariant as the CUSUM/CMS monitors.
 
-from flink_kakfa_spark.operators.sketches import (
-    _KMV_K,
-    _KMV_SPACE,
-    _kmv_md5_32,
-)
+from flink_kakfa_spark.functions.hashing import md5_prefix
+from flink_kakfa_spark.operators.sketches import _KMV_K, _KMV_SPACE
 
 
 def kmv_partial(batch_df: DataFrame) -> DataFrame:
@@ -368,7 +365,7 @@ def kmv_partial(batch_df: DataFrame) -> DataFrame:
 
     h = batch_df.select(
         "event_type",
-        _kmv_md5_32(F.col("user_id").cast("string")).alias("hv"),
+        md5_prefix(F.col("user_id").cast("string")).alias("hv"),
     ).distinct()
     w = Window.partitionBy("event_type").orderBy("hv")
     return (

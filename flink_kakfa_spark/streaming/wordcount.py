@@ -9,6 +9,9 @@ Structured Streaming.
 All transformations here accept either a batch or a streaming
 DataFrame with columns (value: string, ts: timestamp) — the batch
 engine is the oracle for the streaming engine (SURVEY.md §5.2 item 3).
+``word_counts`` is the one word-count definition: the batch
+``wordcount`` query runs it over ``documents.text`` and the Kafka
+materialized view over each increment's record values.
 
 Scale notes: windowed streaming aggs keep state per (window, word);
 watermarks bound that state (T4) — without them, 100 TB/day of stream
@@ -18,37 +21,38 @@ hash agg as the batch path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _words(messages: DataFrame) -> DataFrame:
-    """value sentence → one row per word, keeping event time."""
-    return (
-        messages.select(
-            F.explode(F.split(F.col("value"), " ")).alias("word"), F.col("ts")
-        )
-        .filter(F.col("word") != "")
-    )
+def _words(
+    frame: DataFrame, text_col: Column | str = "value", keep: tuple[str, ...] = ("ts",)
+) -> DataFrame:
+    """Sentences → one row per non-empty word (split on a single space),
+    carrying the ``keep`` columns (by default the message's event time)."""
+    return frame.select(
+        F.explode(F.split(text_col, " ")).alias("word"), *keep
+    ).filter(F.col("word") != "")
+
+
+def word_counts(frame: DataFrame, text_col: Column | str = "text") -> DataFrame:
+    """split → explode → drop empties → groupBy(word).count()."""
+    words = _words(frame, text_col, keep=())
+    return words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def streaming_word_counts(messages: DataFrame) -> DataFrame:
     """T0/A1: global word count (complete-mode output for streams)."""
-    return _words(messages).groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+    return word_counts(messages, "value")
 
 
-def windowed_word_counts(
-    messages: DataFrame,
-    window: str = "10 seconds",
-    watermark: str | None = "10 seconds",
-) -> DataFrame:
-    """T1+T4: tumbling-window word count with optional watermark."""
-    src = messages
+def _window_counts(messages: DataFrame, win: Column, watermark: str | None) -> DataFrame:
+    """Per-(window, word) counts; the watermark applies to streams only."""
     if watermark is not None and messages.isStreaming:
-        src = messages.withWatermark("ts", watermark)
-    w = _words(src)
+        messages = messages.withWatermark("ts", watermark)
     return (
-        w.groupBy(F.window(F.col("ts"), window).alias("win"), F.col("word"))
+        _words(messages)
+        .groupBy(win.alias("win"), F.col("word"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             F.col("win.start").alias("win_start"),
@@ -57,6 +61,15 @@ def windowed_word_counts(
             "cnt",
         )
     )
+
+
+def windowed_word_counts(
+    messages: DataFrame,
+    window: str = "10 seconds",
+    watermark: str | None = "10 seconds",
+) -> DataFrame:
+    """T1+T4: tumbling-window word count with optional watermark."""
+    return _window_counts(messages, F.window(F.col("ts"), window), watermark)
 
 
 def sliding_word_counts(
@@ -66,20 +79,7 @@ def sliding_word_counts(
     watermark: str | None = "10 seconds",
 ) -> DataFrame:
     """T2: sliding-window word count (each row lands in window/slide panes)."""
-    src = messages
-    if watermark is not None and messages.isStreaming:
-        src = messages.withWatermark("ts", watermark)
-    w = _words(src)
-    return (
-        w.groupBy(F.window(F.col("ts"), window, slide).alias("win"), F.col("word"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "word",
-            "cnt",
-        )
-    )
+    return _window_counts(messages, F.window(F.col("ts"), window, slide), watermark)
 
 
 def session_word_counts(
@@ -88,18 +88,7 @@ def session_word_counts(
     watermark: str = "10 seconds",
 ) -> DataFrame:
     """T3: session windows — a session closes after ``gap`` of silence."""
-    src = messages.withWatermark("ts", watermark) if messages.isStreaming else messages
-    w = _words(src)
-    return (
-        w.groupBy(F.session_window(F.col("ts"), gap).alias("win"), F.col("word"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "word",
-            "cnt",
-        )
-    )
+    return _window_counts(messages, F.session_window(F.col("ts"), gap), watermark)
 
 
 def dedup_messages(

@@ -89,6 +89,23 @@ def test_no_source_file_hard_codes_a_checkout_path():
     assert not offenders, "hard-coded checkout path at:\n" + "\n".join(offenders)
 
 
+def test_md5_prefix_is_spelled_only_in_functions_hashing():
+    """The portable md5 prefix has one home: operators call
+    functions/hashing.py for both its Spark and its DuckDB forms."""
+    home = PKG / "functions" / "hashing.py"
+    spellings = ("substring(F.md5", "conv(substring(md5", "substr(md5(")
+    offenders = [
+        f"{path.relative_to(REPO)}:{n}: {line.strip()}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path != home
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if any(s in line for s in spellings)
+    ]
+    assert not offenders, "md5 prefix spelled outside functions/hashing.py:\n" + "\n".join(
+        offenders
+    )
+
+
 def test_entry_module_exposes_driver_contract():
     """__spark_entry__.py must expose entry/queries/oracle_sql."""
     import importlib.util

@@ -7,7 +7,8 @@ import math
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.operators.corpus import _mixture_rates, _portable_uniform
+from flink_kakfa_spark.functions.hashing import md5_uniform as _portable_uniform
+from flink_kakfa_spark.operators.corpus import _mixture_rates
 
 
 def _docs(spark, rows):
