@@ -14,12 +14,20 @@ with the same JSON config schema, the same env overrides
 graceful SIGINT/SIGTERM shutdown (``go/producer/main.go:28-35``) — and
 ``wordcount`` is the missing Flink job: input topic → windowed counts →
 output topic (the topic the reference's consumer already reads,
-``go/consumer/consumer.go:13``).
+``go/consumer/consumer.go:13``), with key = word and value = count.
+
+Kafka is read by the stream source in ``streaming/kafka.py`` (Spark's
+checkpoint owns the offsets, so a restart on the same ``--checkpoint``
+resumes where the last run stopped) and written by
+``dataplane.foreach_batch_sink``, both over the stdlib wire client.
+``consumer`` prints ``Received: <value>`` per record
+(``go/consumer/consumer.go:80``), whatever its source.
 
 Broker-less operation (for tests and local runs): ``--source dir:PATH``
 reads message parquet from a directory instead of Kafka, ``--sink
 console|parquet:PATH`` replaces the Kafka sink. ``--duration N`` bounds
-the run (otherwise runs until signaled, like the reference).
+the run (otherwise runs until signaled, like the reference);
+``--available-now`` processes what is there and exits.
 """
 
 from __future__ import annotations
@@ -38,8 +46,8 @@ from flink_kakfa_spark.config import (
     load_producer_config,
 )
 from flink_kakfa_spark.session import get_spark
-
-MSG_SCHEMA = "key string, value string, ts timestamp"
+from flink_kakfa_spark.streaming.dataplane import foreach_batch_sink
+from flink_kakfa_spark.streaming.kafka import MSG_SCHEMA, read_kafka_stream
 
 
 def _source_stream(
@@ -47,8 +55,6 @@ def _source_stream(
 ) -> DataFrame:
     if source and source.startswith("dir:"):
         return spark.readStream.schema(MSG_SCHEMA).parquet(source[4:] + "/*")
-    from flink_kakfa_spark.streaming.kafka import read_kafka_stream
-
     return read_kafka_stream(spark, cfg)
 
 
@@ -73,17 +79,6 @@ def _start_sink(df: DataFrame, sink: str | None, cfg: ProducerConfig,
         if available_now:
             w = w.trigger(availableNow=True)
         return w.start()
-    from flink_kakfa_spark.streaming.kafka import (
-        connector_available,
-        write_kafka_stream,
-    )
-
-    if connector_available(df.sparkSession):
-        return write_kafka_stream(df, cfg, checkpoint)
-    # connector jar absent: sink through the stdlib data plane
-    # (Produce v3 record batches per micro-batch)
-    from flink_kakfa_spark.streaming.dataplane import foreach_batch_sink
-
     w = (
         df.writeStream.foreachBatch(foreach_batch_sink(cfg.broker, cfg.topic))
         .option("checkpointLocation", checkpoint)
@@ -134,29 +129,14 @@ def cmd_producer(args) -> int:
 def cmd_consumer(args) -> int:
     cfg = load_consumer_config(args.config)
     spark = get_spark("consumer")
-    from flink_kakfa_spark.streaming.kafka import connector_available
-
-    if (args.source in (None, "kafka")) and not connector_available(spark):
-        # connector jar absent: one-shot drain through the stdlib data
-        # plane, logging each message like the reference consumer
-        # (go/consumer/consumer.go:80 "Received: %s")
-        from flink_kakfa_spark.streaming.dataplane import read_topic
-
-        rows = (
-            read_topic(spark, cfg.broker, cfg.topic)
-            .select(F.col("value").cast("string").alias("value"))
-            .collect()
-        )
-        for r in rows:
-            print(f"Received: {r['value']}")
-        return 0
     msgs = _source_stream(spark, args.source, cfg)
-    # processMessage-as-log (go/consumer/consumer.go:79-81)
-    w = (
-        msgs.select(F.col("key"), F.col("value"))
-        .writeStream.format("console")
-        .option("truncate", "false")
-    )
+
+    def log(batch_df: DataFrame, _batch_id: int) -> None:
+        # processMessage-as-log (go/consumer/consumer.go:79-81)
+        for r in batch_df.select("value").collect():
+            print(f"Received: {r['value']}")
+
+    w = msgs.writeStream.foreachBatch(log)
     if args.available_now:
         w = w.trigger(availableNow=True)
     q = w.start()
@@ -173,8 +153,6 @@ def cmd_wordcount(args) -> int:
     from flink_kakfa_spark.streaming.wordcount import windowed_word_counts
 
     msgs = _source_stream(spark, args.source, in_cfg)
-    if "ts" not in msgs.columns:
-        msgs = msgs.withColumn("ts", F.current_timestamp())
     counts = windowed_word_counts(msgs, args.window, args.watermark)
     # Kafka message shape: key=word, value=count (FIXTURES.md §1.4)
     out = counts.select(

@@ -1,21 +1,21 @@
 """Spark ↔ Kafka data plane over the stdlib wire client (``wire.py``).
 
-Completes the reference's produce/consume surface (S2/S3) without the
-``spark-sql-kafka-0-10`` connector jar this container cannot obtain.
-The wire code runs on the driver: an increment of a few thousand
-records costs less to move there than one Spark job costs to schedule.
+Completes the reference's produce/consume surface (S2/S3) with no
+Kafka connector jar; ``kafka.py`` builds the stream source on the same
+wire calls. The wire code runs on the driver: an increment of a few
+thousand records costs less to move there than one Spark job costs to
+schedule.
 
 - ``read_topic_incremental`` — batch read of offsets [start, end) per
   partition, end offsets snapshotted by ListOffsets and every record
-  fetched during the call, as a frame with the connector-compatible
-  schema (key, value, topic, partition, offset, timestamp).
-- ``read_topic``   — its snapshot read from offset 0: the whole topic
-  as of the call.
+  fetched during the call, as a frame of (key, value, topic,
+  partition, offset, timestamp_ms).
 - ``write_topic``  — produce: record *i* goes to Kafka partition
   *i mod n*, in bounded record batches.
 - ``foreach_batch_sink`` — adapter so a streaming query can sink to
-  Kafka through ``writeStream.foreachBatch`` (exactly-once per batch
-  id is the caller's dedup contract, as with any foreachBatch sink).
+  Kafka through ``writeStream.foreachBatch``, keyed by the batch's
+  ``key`` column when it has one (exactly-once per batch id is the
+  caller's dedup contract, as with any foreachBatch sink).
 
 Partitioning parity note: the reference producer uses kafka-go's
 ``LeastBytes`` balancer (``go/producer/producer.go:74``). With the
@@ -51,13 +51,6 @@ def partition_ids(bootstrap: str, topic: str) -> list[int]:
     if err != ERR_NONE:
         raise TopicAdminError(f"Metadata({topic}) error {err}")
     return pids
-
-
-def read_topic(spark: SparkSession, bootstrap: str, topic: str) -> DataFrame:
-    """The whole topic as of this call: ``read_topic_incremental`` from
-    offset 0. End offsets are fixed here, so the frame yields the same
-    rows however many records land after it."""
-    return read_topic_incremental(spark, bootstrap, topic)[0]
 
 
 def read_topic_incremental(
@@ -127,10 +120,12 @@ def write_topic(
     return len(rows)
 
 
-def foreach_batch_sink(bootstrap: str, topic: str, value_col: str = "value"):
-    """``writeStream.foreachBatch`` adapter producing each micro-batch."""
+def foreach_batch_sink(bootstrap: str, topic: str):
+    """``writeStream.foreachBatch`` adapter producing each micro-batch,
+    with its ``key`` column as the record key when it has one."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_topic(batch_df, bootstrap, topic, value_col=value_col)
+        key_col = "key" if "key" in batch_df.columns else None
+        write_topic(batch_df, bootstrap, topic, key_col=key_col)
 
     return sink

@@ -1,126 +1,98 @@
-"""Kafka source/sink (SURVEY.md §2.1 S2/S3, Tier A), config-gated.
+"""Kafka stream source (SURVEY.md §2.1 S3) over the stdlib wire client.
 
-Mirrors the reference's connectivity contract without requiring a
-broker in tests — exactly the reference's own gating idiom
-(``testing.Short()`` skips, env ``KAFKA_BROKER`` configures;
-``go/producer/config.go:104``, ``go/producer/producer_test.go:21-23``).
+A PySpark Python data source (``DataSource`` +
+``SimpleDataSourceStreamReader``): each micro-batch snapshots every
+partition's end offset with ListOffsets and drains ``[start, end)``
+once with ``wire.fetch_range``, as ``(key, value, ts)`` rows — the
+engine twin of ``string(message.Value)`` (``go/consumer/consumer.go:80``).
+The sink side is ``dataplane.foreach_batch_sink``.
 
 Semantics deltas vs the reference, by design:
-- Offsets/consumer-groups: Spark tracks offsets in the checkpoint
-  (``checkpointLocation``), not Kafka group coordination — recovery is
+- Offsets/consumer-groups: the reader returns each batch's end offsets
+  (``{partition: offset}``), so Spark's offset log in the checkpoint
+  owns them, not Kafka group coordination. A replayed batch re-reads
+  exactly its logged range (``readBetweenOffsets``), so recovery is
   exactly-once, strictly stronger than the reference's at-least-once
   (its tests assert ``received >= sent``,
   ``go/producer/producer_test.go:187-194``).
-- Partition balancing: the sink's default sticky/round-robin
-  partitioner stands in for the reference writer's ``LeastBytes``
-  balancer (``go/producer/producer.go:74``).
-- Fetch batching (MinBytes/MaxBytes, ``go/consumer/consumer.go:103-104``)
-  maps to ``maxOffsetsPerTrigger``/``minPartitions`` rate control.
+- Fetch batching (MinBytes/MaxBytes, ``go/consumer/consumer.go:103-104``):
+  a micro-batch takes everything up to the end-offset snapshot.
+- A short fetch raises inside ``read``, so the batch fails before Spark
+  commits its offsets.
 
-Jar-free alternative: when the connector jar is unobtainable
-(``connector_available`` is the one probe for it), the stdlib data
-plane (``wire.py`` + ``dataplane.py``) provides executable
-produce/consume — a driver-side per-partition fetch into a frame,
-Produce v3 RecordBatch writes, and a ``foreachBatch`` streaming
-sink — verified against the wire-protocol broker stand-in in
-``tests/conftest.py``.
+Spark runs the reader in a Python process of its own, started by the
+JVM: ``flink_kakfa_spark`` must be importable there. Local mode needs
+the repo on ``PYTHONPATH`` when the driver runs from another directory;
+a cluster needs the ``tools/package_pyfiles.py`` zip on ``--py-files``.
 """
 
 from __future__ import annotations
 
-import os
+import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from flink_kakfa_spark.config import ConsumerConfig, ProducerConfig
+from flink_kakfa_spark.config import ConsumerConfig
+from flink_kakfa_spark.streaming.dataplane import partition_ids
+from flink_kakfa_spark.streaming.wire import LATEST, fetch_range, list_offset
 
-
-def kafka_available() -> bool:
-    """True when a broker is configured (same env var the reference honors)."""
-    return bool(os.environ.get("KAFKA_BROKER"))
+MSG_SCHEMA = "key string, value string, ts timestamp"
 
 
-def connector_available(spark: SparkSession) -> bool:
-    """True when the spark-sql-kafka connector jar is on the classpath.
-
-    Gates the choice between the connector path (continuous streaming
-    reads) and the stdlib data plane (``dataplane.py``) the CLI falls
-    back to when the jar is absent.
-    """
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-        )
-        return True
-    except Exception:  # noqa: BLE001
-        return False
+def _text(b: bytes | None) -> str | None:
+    return None if b is None else b.decode("utf-8", "replace")
 
 
-def _require_kafka_connector(spark: SparkSession) -> None:
-    """Fail with an actionable message when the Kafka connector jar is
-    absent (it is not bundled with a plain Spark install — submit with
-    --packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>).
-    """
-    if not connector_available(spark):
-        raise RuntimeError(
-            "Kafka source/sink requires the spark-sql-kafka connector on the "
-            "classpath; launch with --packages "
-            "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version> "
-            "(not bundled in this environment)"
-        )
+class KafkaStreamReader(SimpleDataSourceStreamReader):
+    """Offsets are ``{str(partition): next offset}`` (JSON object keys)."""
+
+    def __init__(self, broker: str, topic: str) -> None:
+        self.broker, self.topic = broker, topic
+
+    def initialOffset(self) -> dict:
+        return {str(p): 0 for p in partition_ids(self.broker, self.topic)}
+
+    def read(self, start: dict):
+        end = {
+            str(p): list_offset(self.broker, self.topic, p, LATEST)
+            for p in partition_ids(self.broker, self.topic)
+        }
+        return self.readBetweenOffsets(start, end), end
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        # Fetched now, not lazily: a short read raises from read(), before
+        # Spark logs ``end``. A partition missing from ``start`` is new.
+        return iter([
+            (
+                _text(r.key),
+                _text(r.value),
+                dt.datetime.fromtimestamp(r.timestamp_ms / 1000, dt.timezone.utc),
+            )
+            for p, hi in end.items()
+            for r in fetch_range(self.broker, self.topic, int(p), start.get(p, 0), hi)
+        ])
 
 
-def read_kafka_stream(
-    spark: SparkSession,
-    cfg: ConsumerConfig | None = None,
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """S3: subscribe to the configured topic → (key, value, ts) stream.
+class KafkaSource(DataSource):
+    @classmethod
+    def name(cls) -> str:
+        return "flink_kakfa_spark_kafka"
 
-    Decodes the reference's byte payloads to strings — the engine twin
-    of ``string(message.Value)`` (``go/consumer/consumer.go:80``).
-    """
+    def schema(self) -> str:
+        return MSG_SCHEMA
+
+    def simpleStreamReader(self, schema) -> KafkaStreamReader:
+        return KafkaStreamReader(self.options["broker"], self.options["topic"])
+
+
+def read_kafka_stream(spark: SparkSession, cfg: ConsumerConfig | None = None) -> DataFrame:
+    """S3: the configured topic as a (key, value, ts) stream, from offset 0."""
     cfg = cfg or ConsumerConfig()
-    _require_kafka_connector(spark)
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", cfg.broker)
-        .option("subscribe", cfg.topic)
-        .option("startingOffsets", "earliest")
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    raw = reader.load()
-    return raw.select(
-        F.col("key").cast("string").alias("key"),
-        F.col("value").cast("string").alias("value"),
-        F.col("timestamp").alias("ts"),
-    )
-
-
-def write_kafka_stream(
-    df: DataFrame,
-    cfg: ProducerConfig | None = None,
-    checkpoint_dir: str = "/tmp/flink_kakfa_spark/kafka_sink_ckpt",
-) -> StreamingQuery:
-    """S2: write (key, value) rows to the configured topic.
-
-    Per-message failures are retried by task retry + checkpoint replay
-    (the engine's version of the producer's log-and-continue loop,
-    ``go/producer/producer.go:91-94``).
-    """
-    cfg = cfg or ProducerConfig()
-    _require_kafka_connector(df.sparkSession)
-    out = df.select(
-        F.col("key").cast("string").alias("key"),
-        F.col("value").cast("string").alias("value"),
-    )
+    spark.dataSource.register(KafkaSource)
     return (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", cfg.broker)
+        spark.readStream.format(KafkaSource.name())
+        .option("broker", cfg.broker)
         .option("topic", cfg.topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        .load()
     )

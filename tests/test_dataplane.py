@@ -124,12 +124,12 @@ def test_fetch_range_raises_on_short_read(broker):
 
 
 def test_spark_read_topic_distributed(spark, broker):
-    from flink_kakfa_spark.streaming.dataplane import read_topic
+    from flink_kakfa_spark.streaming.dataplane import read_topic_incremental
 
     broker.add_topic("t2", 2)
     produce(broker.addr, "t2", [(b"a", b"p0-first"), (b"b", b"p0-second")], 0)
     produce(broker.addr, "t2", [(None, b"p1-only")], 1)
-    df = read_topic(spark, broker.addr, "t2")
+    df = read_topic_incremental(spark, broker.addr, "t2")[0]
     rows = df.collect()
     assert {
         (bytes(r["value"]), r["partition"], r["offset"]) for r in rows
@@ -138,14 +138,15 @@ def test_spark_read_topic_distributed(spark, broker):
 
 
 def test_read_topic_is_a_snapshot_of_the_call(spark, broker):
-    """read_topic fixes each partition's end offset when it is called:
-    records produced before the frame is collected are not in it."""
-    from flink_kakfa_spark.streaming.dataplane import read_topic
+    """read_topic_incremental fixes each partition's end offset when it
+    is called: records produced before the frame is collected are not in
+    it."""
+    from flink_kakfa_spark.streaming.dataplane import read_topic_incremental
 
     broker.add_topic("snap", 2)
     produce(broker.addr, "snap", [(None, b"early-0")], 0)
     produce(broker.addr, "snap", [(None, b"early-1")], 1)
-    df = read_topic(spark, broker.addr, "snap")
+    df = read_topic_incremental(spark, broker.addr, "snap")[0]
     produce(broker.addr, "snap", [(None, b"late-0")], 0)
     produce(broker.addr, "snap", [(None, b"late-1")], 1)
     assert sorted(bytes(r["value"]) for r in df.collect()) == [
@@ -157,7 +158,7 @@ def test_read_topic_is_a_snapshot_of_the_call(spark, broker):
 def test_spark_write_topic_round_robin(spark, broker):
     from pyspark.sql import functions as F
 
-    from flink_kakfa_spark.streaming.dataplane import read_topic, write_topic
+    from flink_kakfa_spark.streaming.dataplane import read_topic_incremental, write_topic
 
     broker.add_topic("t3", 2)
     df = spark.range(20).select(
@@ -165,7 +166,7 @@ def test_spark_write_topic_round_robin(spark, broker):
     )
     n = write_topic(df, broker.addr, "t3")
     assert n == 20
-    back = read_topic(spark, broker.addr, "t3").collect()
+    back = read_topic_incremental(spark, broker.addr, "t3")[0].collect()
     assert len(back) == 20
     assert {bytes(r["value"]).decode() for r in back} == {
         f"msg-{i}" for i in range(20)
@@ -193,14 +194,14 @@ def test_kafka_wordcount_round_trip(spark, broker):
     (go/integration/integration_test.go:20-62)."""
     from pyspark.sql import functions as F
 
-    from flink_kakfa_spark.streaming.dataplane import read_topic, write_topic
+    from flink_kakfa_spark.streaming.dataplane import read_topic_incremental, write_topic
     from flink_kakfa_spark.streaming.generator import sentence_batch
 
     broker.add_topic("wc", 2)
     sent = sentence_batch(spark, 60).select("value")
     assert write_topic(sent, broker.addr, "wc") == 60
 
-    consumed = read_topic(spark, broker.addr, "wc").select(
+    consumed = read_topic_incremental(spark, broker.addr, "wc")[0].select(
         F.col("value").cast("string").alias("line")
     )
     got = {

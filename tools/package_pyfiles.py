@@ -10,9 +10,15 @@ ships as a zip on every job:
 The archive contains only the package sources (no tests, no caches,
 deterministic member order and zeroed timestamps, so re-builds of the
 same tree are byte-identical — a content-addressable artifact for CI
-caches). With the zip on ``--py-files``, the closures the mapInPandas
-operators capture resolve imports on executors without the repo
-checkout.
+caches). With the zip on ``--py-files``, these resolve imports without
+the repo checkout:
+
+- the closures the mapInPandas operators capture, on executors;
+- the Kafka stream source (``streaming/kafka.py``), whose reader Spark
+  runs in Python workers of its own, on the driver and on executors.
+  In local mode those workers find the package only through the
+  driver's working directory or ``PYTHONPATH``: a driver started from
+  another directory needs the repo on ``PYTHONPATH``.
 """
 
 from __future__ import annotations
