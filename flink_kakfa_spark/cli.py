@@ -59,30 +59,21 @@ def _source_stream(
 
 
 def _start_sink(df: DataFrame, sink: str | None, cfg: ProducerConfig,
-                checkpoint: str, output_mode: str = "append",
-                available_now: bool = False):
+                checkpoint: str, available_now: bool = False):
+    """Start ``df`` in append mode (the writer default) on the chosen sink."""
     if sink == "console" or (sink is None and not cfg.broker):
-        w = (
-            df.writeStream.format("console").option("truncate", "false")
-            .outputMode(output_mode)
-        )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        return w.start()
-    if sink and sink.startswith("parquet:"):
+        w = df.writeStream.format("console").option("truncate", "false")
+    elif sink and sink.startswith("parquet:"):
         w = (
             df.writeStream.format("parquet")
             .option("path", sink[8:])
             .option("checkpointLocation", checkpoint)
-            .outputMode(output_mode)
         )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        return w.start()
-    w = (
-        df.writeStream.foreachBatch(foreach_batch_sink(cfg.broker, cfg.topic))
-        .option("checkpointLocation", checkpoint)
-    )
+    else:
+        w = (
+            df.writeStream.foreachBatch(foreach_batch_sink(cfg.broker, cfg.topic))
+            .option("checkpointLocation", checkpoint)
+        )
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
@@ -166,7 +157,6 @@ def cmd_wordcount(args) -> int:
     q = _start_sink(
         out, args.sink, out_cfg,
         checkpoint=args.checkpoint or "/tmp/flink_kakfa_spark/wordcount_ckpt",
-        output_mode="append",
         available_now=args.available_now,
     )
     _await(q, args.duration, args.available_now)
@@ -177,7 +167,6 @@ def cmd_topics(args) -> int:
     """S7 topic admin: the reference's test-setup flow as a command
     (controller discovery + CreateTopics, go/integration/
     integration_test.go:66-91). Pure control-plane RPC — no Spark."""
-    from flink_kakfa_spark.config import load_producer_config
     from flink_kakfa_spark.streaming import topics as t
 
     broker = args.broker or load_producer_config(args.config).broker
@@ -214,8 +203,6 @@ def cmd_query(args) -> int:
     if args.name not in qs:
         print(f"error: unknown query {args.name!r} (see --list)", file=sys.stderr)
         return 2
-    from flink_kakfa_spark.session import get_spark
-
     spark = get_spark(f"query-{args.name}")
     df = qs[args.name](spark, args.sf_dir)
     if args.explain:

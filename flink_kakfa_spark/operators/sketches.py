@@ -194,6 +194,30 @@ def _cms_bucket_spark(word, salt: int):
     return md5_prefix(F.concat(F.lit(f"{salt}:"), word), 2).cast("int")
 
 
+def cms_cells(df: DataFrame) -> DataFrame:
+    """``df``'s rows once per sketch depth, each with that depth's
+    ``(salt, bucket)`` cell of its ``word`` column.
+
+    One in-array explode, not a 3-way union: a union would clone the
+    input subtree and triple its shuffle, while with explode two
+    consumers of the same input share one Exchange via ReusedExchange.
+    """
+    return df.select(
+        *df.columns,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(salt).alias("salt"),
+                        _cms_bucket_spark(F.col("word"), salt).alias("bucket"),
+                    )
+                    for salt in range(_CMS_DEPTH)
+                ]
+            )
+        ).alias("sb"),
+    ).select(*df.columns, "sb.salt", "sb.bucket")
+
+
 def _cms_bucket_sql(salt: int, word: str = "word") -> str:
     return "(" + sql_md5_prefix(f"'{salt}:' || {word}", 2) + ")"
 
@@ -256,32 +280,13 @@ def q_sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("exact_cnt"))
 
-    def _cells(df):  # (salt, bucket) per depth via ONE in-array explode,
-        # not a 3-way union (a union would clone the word-count subtree
-        # and triple its shuffle; with explode the two consumers below
-        # share one Exchange via ReusedExchange)
-        return df.select(
-            *df.columns,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(salt).alias("salt"),
-                            _cms_bucket_spark(F.col("word"), salt).alias("bucket"),
-                        )
-                        for salt in range(_CMS_DEPTH)
-                    ]
-                )
-            ).alias("sb"),
-        ).select(*df.columns, "sb.salt", "sb.bucket")
-
     sketch = (
-        _cells(counts)
+        cms_cells(counts)
         .groupBy("salt", "bucket")
         .agg(F.sum("exact_cnt").alias("total"))
     )
     top20 = counts.orderBy(F.col("exact_cnt").desc(), "word").limit(20)
-    joined = _cells(top20).join(F.broadcast(sketch), ["salt", "bucket"])
+    joined = cms_cells(top20).join(F.broadcast(sketch), ["salt", "bucket"])
     return joined.groupBy("word", "exact_cnt").agg(
         F.min("total").alias("cms_estimate"),
         (F.min("total") - F.col("exact_cnt")).alias("overestimate"),
@@ -542,12 +547,7 @@ def q_sketch_kmv_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("exact_users")
     )
-    est = F.when(F.col("n_held") < _KMV_K, F.col("n_held")).otherwise(
-        F.floor(
-            F.lit((_KMV_K - 1) * _KMV_SPACE)
-            / F.greatest(F.col("kth"), F.lit(1))
-        )
-    )
+    est = _kmv_estimate(F.col("n_held"), F.col("kth"))
     return (
         exact.join(sk, "event_type")
         .select(

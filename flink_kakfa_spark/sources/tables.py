@@ -105,14 +105,3 @@ def parallelize(df: DataFrame, spark: SparkSession) -> DataFrame:
     if splits * 2 <= target:
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    """Read every fixture table; returns {name: DataFrame}."""
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register each table as a temp view so ``spark.sql`` queries work."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -6,10 +6,11 @@ wire calls. The wire code runs on the driver: an increment of a few
 thousand records costs less to move there than one Spark job costs to
 schedule.
 
-- ``read_topic_incremental`` — batch read of offsets [start, end) per
-  partition, end offsets snapshotted by ListOffsets and every record
-  fetched during the call, as a frame of (key, value, topic,
-  partition, offset, timestamp_ms).
+- ``snapshot_and_drain`` — the one read both readers share: snapshot
+  every partition's end offset with ListOffsets, then fetch
+  [start, end) per partition.
+- ``read_topic_incremental`` — that read as a frame of (key, value,
+  topic, partition, offset, timestamp_ms), plus the end offsets.
 - ``write_topic``  — produce: record *i* goes to Kafka partition
   *i mod n*, in bounded record batches.
 - ``foreach_batch_sink`` — adapter so a streaming query can sink to
@@ -34,7 +35,13 @@ from flink_kakfa_spark.streaming.topics import (
     TopicAdminError,
     cluster_metadata,
 )
-from flink_kakfa_spark.streaming.wire import LATEST, fetch_range, list_offset, produce
+from flink_kakfa_spark.streaming.wire import (
+    LATEST,
+    Record,
+    fetch_range,
+    list_offset,
+    produce,
+)
 
 READ_SCHEMA = (
     "key binary, value binary, topic string, partition int, "
@@ -51,6 +58,32 @@ def partition_ids(bootstrap: str, topic: str) -> list[int]:
     if err != ERR_NONE:
         raise TopicAdminError(f"Metadata({topic}) error {err}")
     return pids
+
+
+def drain(
+    bootstrap: str, topic: str, start: dict[int, int], end: dict[int, int]
+) -> list[tuple[int, Record]]:
+    """Every ``(partition, record)`` with offset in
+    [start[p], end[p]) for each partition of ``end``; a partition
+    missing from ``start`` is read from offset 0."""
+    return [
+        (p, r)
+        for p, hi in end.items()
+        for r in fetch_range(bootstrap, topic, p, start.get(p, 0), hi)
+    ]
+
+
+def snapshot_and_drain(
+    bootstrap: str, topic: str, start: dict[int, int]
+) -> tuple[list[tuple[int, Record]], dict[int, int]]:
+    """Snapshot every partition's end offset with ListOffsets, then
+    ``drain`` up to it; returns the records and the end offsets. Rows
+    produced after the snapshot belong to the next read."""
+    end = {
+        p: list_offset(bootstrap, topic, p, LATEST)
+        for p in partition_ids(bootstrap, topic)
+    }
+    return drain(bootstrap, topic, start, end), end
 
 
 def read_topic_incremental(
@@ -75,15 +108,9 @@ def read_topic_incremental(
     raises before the caller can commit, and the returned frame never
     goes back to the broker.
     """
-    pids = partition_ids(bootstrap, topic)
-    start = {p: 0 for p in pids}
-    if start_offsets:
-        start.update(start_offsets)
-    end = {p: list_offset(bootstrap, topic, p, LATEST) for p in pids}
+    records, end = snapshot_and_drain(bootstrap, topic, start_offsets or {})
     rows = [
-        (r.key, r.value, topic, p, r.offset, r.timestamp_ms)
-        for p in pids
-        for r in fetch_range(bootstrap, topic, p, start[p], end[p])
+        (r.key, r.value, topic, p, r.offset, r.timestamp_ms) for p, r in records
     ]
     return spark.createDataFrame(rows, READ_SCHEMA), end
 

@@ -3,7 +3,7 @@
 A PySpark Python data source (``DataSource`` +
 ``SimpleDataSourceStreamReader``): each micro-batch snapshots every
 partition's end offset with ListOffsets and drains ``[start, end)``
-once with ``wire.fetch_range``, as ``(key, value, ts)`` rows — the
+once (``dataplane.snapshot_and_drain``), as ``(key, value, ts)`` rows — the
 engine twin of ``string(message.Value)`` (``go/consumer/consumer.go:80``).
 The sink side is ``dataplane.foreach_batch_sink``.
 
@@ -34,14 +34,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from flink_kakfa_spark.config import ConsumerConfig
-from flink_kakfa_spark.streaming.dataplane import partition_ids
-from flink_kakfa_spark.streaming.wire import LATEST, fetch_range, list_offset
+from flink_kakfa_spark.streaming.dataplane import (
+    drain,
+    partition_ids,
+    snapshot_and_drain,
+)
 
 MSG_SCHEMA = "key string, value string, ts timestamp"
 
 
 def _text(b: bytes | None) -> str | None:
     return None if b is None else b.decode("utf-8", "replace")
+
+
+def _ints(offsets: dict) -> dict[int, int]:
+    return {int(p): o for p, o in offsets.items()}
+
+
+def _rows(records):
+    return iter([
+        (
+            _text(r.key),
+            _text(r.value),
+            dt.datetime.fromtimestamp(r.timestamp_ms / 1000, dt.timezone.utc),
+        )
+        for _, r in records
+    ])
 
 
 class KafkaStreamReader(SimpleDataSourceStreamReader):
@@ -54,24 +72,13 @@ class KafkaStreamReader(SimpleDataSourceStreamReader):
         return {str(p): 0 for p in partition_ids(self.broker, self.topic)}
 
     def read(self, start: dict):
-        end = {
-            str(p): list_offset(self.broker, self.topic, p, LATEST)
-            for p in partition_ids(self.broker, self.topic)
-        }
-        return self.readBetweenOffsets(start, end), end
+        # Fetched now, not lazily: a short read raises here, before Spark
+        # logs ``end``. A partition missing from ``start`` is new.
+        records, end = snapshot_and_drain(self.broker, self.topic, _ints(start))
+        return _rows(records), {str(p): o for p, o in end.items()}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        # Fetched now, not lazily: a short read raises from read(), before
-        # Spark logs ``end``. A partition missing from ``start`` is new.
-        return iter([
-            (
-                _text(r.key),
-                _text(r.value),
-                dt.datetime.fromtimestamp(r.timestamp_ms / 1000, dt.timezone.utc),
-            )
-            for p, hi in end.items()
-            for r in fetch_range(self.broker, self.topic, int(p), start.get(p, 0), hi)
-        ])
+        return _rows(drain(self.broker, self.topic, _ints(start), _ints(end)))
 
 
 class KafkaSource(DataSource):

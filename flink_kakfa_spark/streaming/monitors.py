@@ -1,71 +1,90 @@
-"""Streaming twins of the reconciliation / drift operators: a
-continuously-maintained table-checksum manifest and a per-batch PSI
-drift monitor.
+"""Streaming twins of the reconciliation / drift / sketch operators:
+exactly-once tables folded from per-micro-batch partials.
 
 The reference's consumer only logs what arrives
-(``go/consumer/consumer.go:79-81``); the first two production
-questions about such a feed are "does the landed copy still equal the
-source?" and "has the distribution shifted?". Both batch answers
-(``operators/reconcile.py::reconcile_table_checksum``,
-``operators/quality.py::drift_psi_report``) are built from mergeable
-pieces, so they stream for free:
+(``go/consumer/consumer.go:79-81``); the first production questions
+about such a feed are "does the landed copy still equal the source?",
+"has the distribution shifted?" and "how often / by how many has X
+happened?". The batch answers (``operators/reconcile.py``,
+``operators/quality.py::drift_psi_report``,
+``operators/analytics.py::cusum_daily``, ``operators/sketches.py``)
+are built from mergeable pieces, so they stream with one recipe:
 
-- The checksum manifest's accumulators (COUNT / SUM / BIT_XOR of row
-  hashes) are commutative and associative, so per-micro-batch partial
-  manifests written to ``batch_id=N`` subdirectories merge to the
-  exact full-table manifest at read time. Replaying a batch after a
-  crash overwrites its own subdirectory — exactly-once at the table
+- ``_stream_partials`` writes each micro-batch's partial to its own
+  subdirectory, keyed by batch id, with overwrite. Replaying a batch
+  after a crash overwrites its own partial — exactly-once at the table
   level without coordination.
+- ``_read_partials`` reads every partial back; each ``read_*`` folds
+  them with the operator's commutative, associative merge (SUM,
+  BIT_XOR, k smallest of the union), so the result equals the batch
+  operator run over every row ever streamed.
 - PSI against a FIXED reference window (the production monitoring
   shape: baseline vs live traffic) needs only the reference's bin
-  layout and smoothed shares, both broadcast-sized.
+  layout and smoothed shares, both broadcast-sized; its per-batch
+  reports are the log itself, not folded.
 
 Scale notes: each micro-batch does one narrow pass + a map-side
-combined aggregate into |shards| or |types|x|bins| rows; the state on
-disk grows by KBs per batch regardless of stream volume.
+combined aggregate into |shards|, |types|x|bins|, 3x256 or k-per-type
+rows; the state on disk grows by KBs per batch regardless of stream
+volume.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.operators.reconcile import manifest_partial
+from flink_kakfa_spark.functions.hashing import md5_prefix
+from flink_kakfa_spark.operators.analytics import cusum_daily, cusum_from_daily
+from flink_kakfa_spark.operators.reconcile import (
+    manifest_partial,
+    snapshot_diff_partial,
+)
+from flink_kakfa_spark.operators.sketches import _KMV_K, _kmv_estimate, cms_cells
+from flink_kakfa_spark.streaming.wordcount import split_words
 
 PSI_BINS = 10
 PSI_ALERT = 0.2
 
 
-def streaming_checksum_manifest(orders: DataFrame, path: str, checkpoint: str):
-    """Maintain the sharded table-checksum manifest over an orders
-    stream; returns the StreamingQuery.
-
-    Each micro-batch writes ITS OWN partial manifest under
-    ``{path}/batch_id=N`` with overwrite — idempotent under crash
-    replay. ``read_manifest`` folds the partials; because the
-    accumulators commute, the result equals the batch operator run
-    over the union of all rows ever streamed.
-    """
+def _stream_partials(stream: DataFrame, partial, path: str, checkpoint: str):
+    """Write ``partial(batch_df, batch_id)`` for every micro-batch of
+    ``stream`` to ``{path}/batch_id=N`` with overwrite, until the input
+    available now is drained; returns the StreamingQuery."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         (
-            manifest_partial(batch_df)
+            partial(batch_df, batch_id)
             .write.mode("overwrite")
             .parquet(f"{path}/batch_id={batch_id}")
         )
 
     return (
-        orders.writeStream.foreachBatch(upsert)
+        stream.writeStream.foreachBatch(upsert)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
 
 
+def _read_partials(spark: SparkSession, path: str) -> DataFrame:
+    """Every partial ``_stream_partials`` has written under ``path``."""
+    return spark.read.parquet(f"{path}/batch_id=*")
+
+
+def streaming_checksum_manifest(orders: DataFrame, path: str, checkpoint: str):
+    """Maintain the sharded table-checksum manifest over an orders
+    stream; returns the StreamingQuery. ``read_manifest`` folds the
+    per-batch partial manifests (COUNT / SUM / BIT_XOR of row hashes)."""
+    return _stream_partials(
+        orders, lambda df, _: manifest_partial(df), path, checkpoint
+    )
+
+
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
     """Fold the per-batch partials to the current full manifest."""
     return (
-        spark.read.parquet(f"{path}/batch_id=*")
+        _read_partials(spark, path)
         .groupBy("shard")
         .agg(
             F.sum("n_rows").cast("long").alias("n_rows"),
@@ -182,60 +201,32 @@ def psi_report(batch_df: DataFrame, profile: DataFrame) -> DataFrame:
 def streaming_psi_monitor(
     events: DataFrame, profile: DataFrame, path: str, checkpoint: str
 ):
-    """Append one PSI report per (micro-batch, event type) to a
-    Parquet log; returns the StreamingQuery.
-
-    The report write is keyed by ``batch_id`` (overwrite of the
-    batch's own subdirectory), so crash replay is idempotent.
-    """
+    """Log one PSI report per (micro-batch, event type), tagged with
+    its ``batch_id``; returns the StreamingQuery."""
     prof = profile.localCheckpoint()  # tiny; pin so every batch reuses it
-
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            psi_report(batch_df, prof)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .parquet(f"{path}/batch_id={batch_id}")
-        )
-
-    return (
-        events.writeStream.foreachBatch(score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_partials(
+        events,
+        lambda df, batch_id: psi_report(df, prof).withColumn(
+            "batch_id", F.lit(batch_id).cast("long")
+        ),
+        path,
+        checkpoint,
     )
 
 
 # --- streaming CUSUM change-point monitor ------------------------------
 # The CUSUM state is the (type, day) -> decimal-sum relation
 # (operators/analytics.py::cusum_daily) whose accumulator is a plain
-# SUM — commutative and associative — so per-micro-batch partials
-# written to batch_id=N subdirectories merge to the exact full-history
-# state, the same exactly-once recipe as the checksum manifest. The
-# report (prefix-sum-minus-prefix-min peak per type) derives from the
-# merged state at read time and equals the batch operator run over
-# every row ever streamed.
-
-from flink_kakfa_spark.operators.analytics import cusum_daily, cusum_from_daily
+# SUM. The report (prefix-sum-minus-prefix-min peak per type) derives
+# from the merged state at read time and equals the batch operator run
+# over every row ever streamed.
 
 
 def streaming_cusum_monitor(events: DataFrame, path: str, checkpoint: str):
     """Maintain the daily CUSUM state over an event stream; returns
-    the StreamingQuery. Crash replay overwrites the batch's own
-    partial subdirectory — idempotent."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            cusum_daily(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{path}/batch_id={batch_id}")
-        )
-
-    return (
-        events.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    the StreamingQuery."""
+    return _stream_partials(
+        events, lambda df, _: cusum_daily(df), path, checkpoint
     )
 
 
@@ -243,7 +234,7 @@ def read_cusum_report(spark: SparkSession, path: str) -> DataFrame:
     """Fold the per-batch daily partials and compute the exact CUSUM
     report over the merged history."""
     daily = (
-        spark.read.parquet(f"{path}/batch_id=*")
+        _read_partials(spark, path)
         .groupBy("event_type", "d")
         .agg(F.sum("x").cast("decimal(28,6)").alias("x"))
     )
@@ -252,61 +243,29 @@ def read_cusum_report(spark: SparkSession, path: str) -> DataFrame:
 
 # --- streaming count-min heavy-term monitor -----------------------------
 # Count-min cells are data-independent (salt x md5-bucket) and merge by
-# plain cell-wise SUM, so per-micro-batch 3x256 partials under
-# batch_id=N fold to the sketch the batch operator
+# plain cell-wise SUM, so per-micro-batch 3x256 partials fold to the
+# sketch the batch operator
 # (operators/sketches.py::q_sketch_cms_heavy_hitters) would build over
 # every document ever streamed. The monitor tracks a FIXED WATCHLIST of
 # terms (the production shape, like the PSI monitor's fixed reference
-# profile): estimates are min-over-depth reads of the folded cells —
-# KBs of state per batch regardless of stream volume.
-
-from flink_kakfa_spark.operators.sketches import (
-    _CMS_DEPTH,
-    _cms_bucket_spark,
-)
+# profile): estimates are min-over-depth reads of the folded cells.
 
 
 def cms_partial(batch_df: DataFrame) -> DataFrame:
     """3 x 256 count-min cell partial for one micro-batch of
     documents."""
-    words = batch_df.select(
-        F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    cells = words.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(salt).alias("salt"),
-                        _cms_bucket_spark(F.col("word"), salt).alias("bucket"),
-                    )
-                    for salt in range(_CMS_DEPTH)
-                ]
-            )
-        ).alias("sb")
-    ).select("sb.salt", "sb.bucket")
-    return cells.groupBy("salt", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("total")
+    return (
+        cms_cells(split_words(batch_df, "text", keep=()))
+        .groupBy("salt", "bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("total"))
     )
 
 
 def streaming_cms_monitor(docs: DataFrame, path: str, checkpoint: str):
     """Maintain the count-min sketch over a document stream; returns
-    the StreamingQuery. Crash replay overwrites the batch's own
-    partial subdirectory — idempotent."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            cms_partial(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{path}/batch_id={batch_id}")
-        )
-
-    return (
-        docs.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    the StreamingQuery."""
+    return _stream_partials(
+        docs, lambda df, _: cms_partial(df), path, checkpoint
     )
 
 
@@ -316,27 +275,14 @@ def read_cms_estimates(
     """Fold the per-batch cell partials and read the min-over-depth
     count-min estimate for each watchlist term."""
     sketch = (
-        spark.read.parquet(f"{path}/batch_id=*")
+        _read_partials(spark, path)
         .groupBy("salt", "bucket")
         .agg(F.sum("total").cast("long").alias("total"))
     )
     wl = spark.createDataFrame([(w,) for w in watchlist], ["word"])
-    cells = wl.select(
-        "word",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(salt).alias("salt"),
-                        _cms_bucket_spark(F.col("word"), salt).alias("bucket"),
-                    )
-                    for salt in range(_CMS_DEPTH)
-                ]
-            )
-        ).alias("sb"),
-    ).select("word", "sb.salt", "sb.bucket")
     return (
-        cells.join(F.broadcast(sketch), ["salt", "bucket"])
+        cms_cells(wl)
+        .join(F.broadcast(sketch), ["salt", "bucket"])
         .groupBy("word")
         .agg(F.min("total").cast("long").alias("cms_estimate"))
         .orderBy("word")
@@ -348,21 +294,15 @@ def read_cms_estimates(
 # part's k smallest": if hash h is among a type's k smallest distinct
 # hashes overall, then any micro-batch containing h has fewer than k
 # hashes below h, so h survives that batch's k-min partial — no global
-# minimum can be lost. Per-batch partials under batch_id=N therefore
-# fold to the EXACT sketch (and estimate) the batch operator
+# minimum can be lost. Per-batch partials therefore fold to the EXACT
+# sketch (and estimate) the batch operator
 # (operators/sketches.py::q_sketch_kmv_distinct_rollup) computes over
-# every event ever streamed, with <= k rows per event_type per batch of
-# state — the same KB-scale invariant as the CUSUM/CMS monitors.
-
-from flink_kakfa_spark.functions.hashing import md5_prefix
-from flink_kakfa_spark.operators.sketches import _KMV_K, _KMV_SPACE
+# every event ever streamed, with <= k rows per event_type per batch.
 
 
 def kmv_partial(batch_df: DataFrame) -> DataFrame:
     """Per-event_type k-min partial (<= k smallest distinct user-id
     hashes) for one micro-batch of events."""
-    from pyspark.sql import Window
-
     h = batch_df.select(
         "event_type",
         md5_prefix(F.col("user_id").cast("string")).alias("hv"),
@@ -377,22 +317,30 @@ def kmv_partial(batch_df: DataFrame) -> DataFrame:
 
 def streaming_kmv_monitor(events: DataFrame, path: str, checkpoint: str):
     """Maintain per-type KMV distinct-user sketches over an event
-    stream; returns the StreamingQuery. Crash replay overwrites the
-    batch's own partial subdirectory — idempotent."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            kmv_partial(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{path}/batch_id={batch_id}")
-        )
-
-    return (
-        events.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    stream; returns the StreamingQuery."""
+    return _stream_partials(
+        events, lambda df, _: kmv_partial(df), path, checkpoint
     )
+
+
+def read_kmv_estimates(spark: SparkSession, path: str) -> DataFrame:
+    """Fold the per-batch k-min partials and read the KMV estimate
+    (``_kmv_estimate``) per event_type."""
+    w = Window.partitionBy("event_type").orderBy("hv")
+    merged = (
+        _read_partials(spark, path)
+        .select("event_type", "hv")
+        .distinct()
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _KMV_K)
+    )
+    sk = merged.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_held"), F.max("hv").alias("kth")
+    )
+    est = _kmv_estimate(F.col("n_held"), F.col("kth"))
+    return sk.select(
+        "event_type", est.cast("long").alias("kmv_users")
+    ).orderBy("event_type")
 
 
 # --- streaming snapshot-diff monitor -------------------------------------
@@ -401,31 +349,15 @@ def streaming_kmv_monitor(events: DataFrame, path: str, checkpoint: str):
 # two views that BOTH derive deterministically from the same physical
 # orders row, so a row-disjoint stream of orders splits the diff into
 # key-disjoint pieces: each micro-batch's per-class (COUNT, SUM key,
-# DECIMAL SUM price delta) partial under batch_id=N folds by plain SUM
-# to the exact full-table diff — the same exactly-once recipe as the
-# checksum/CUSUM/CMS/KMV monitors, closing the last drift/reconcile
-# operator without a streaming twin (VERDICT r7 item 6).
-
-from flink_kakfa_spark.operators.reconcile import snapshot_diff_partial
+# DECIMAL SUM price delta) partial folds by plain SUM to the exact
+# full-table diff.
 
 
 def streaming_snapshot_diff_monitor(orders: DataFrame, path: str, checkpoint: str):
     """Maintain the incremental snapshot diff over an orders stream;
-    returns the StreamingQuery. Crash replay overwrites the batch's
-    own partial subdirectory — idempotent."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            snapshot_diff_partial(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{path}/batch_id={batch_id}")
-        )
-
-    return (
-        orders.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    returns the StreamingQuery."""
+    return _stream_partials(
+        orders, lambda df, _: snapshot_diff_partial(df), path, checkpoint
     )
 
 
@@ -433,7 +365,7 @@ def read_snapshot_diff(spark: SparkSession, path: str) -> DataFrame:
     """Fold the per-batch per-class partials to the exact full-history
     diff report (same columns as ``reconcile_snapshot_diff``)."""
     return (
-        spark.read.parquet(f"{path}/batch_id=*")
+        _read_partials(spark, path)
         .groupBy("change_type")
         .agg(
             F.sum("n_rows").cast("long").alias("n_rows"),
@@ -445,31 +377,3 @@ def read_snapshot_diff(spark: SparkSession, path: str) -> DataFrame:
         )
         .orderBy("change_type")
     )
-
-
-def read_kmv_estimates(spark: SparkSession, path: str) -> DataFrame:
-    """Fold the per-batch k-min partials and read the classic
-    ``(k-1) * |space| / kth_min`` estimate per event_type (degrading
-    to the exact held count when fewer than k hashes exist)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy("hv")
-    merged = (
-        spark.read.parquet(f"{path}/batch_id=*")
-        .select("event_type", "hv")
-        .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KMV_K)
-    )
-    sk = merged.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_held"), F.max("hv").alias("kth")
-    )
-    est = F.when(F.col("n_held") < _KMV_K, F.col("n_held")).otherwise(
-        F.floor(
-            F.lit((_KMV_K - 1) * _KMV_SPACE)
-            / F.greatest(F.col("kth"), F.lit(1))
-        )
-    )
-    return sk.select(
-        "event_type", est.cast("long").alias("kmv_users")
-    ).orderBy("event_type")

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_kakfa_spark.streaming.wordcount import split_words
+
 
 def running_word_totals(messages: DataFrame) -> DataFrame:
     """Cumulative all-time count per word, emitted on every change.
@@ -27,10 +29,7 @@ def running_word_totals(messages: DataFrame) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    words = (
-        messages.select(F.explode(F.split(F.col("value"), " ")).alias("word"))
-        .filter(F.col("word") != "")
-    )
+    words = split_words(messages, keep=())
 
     # closure (not module-level) so cloudpickle ships it by value and
     # workers never need this package importable — see multimodal.py
@@ -73,13 +72,7 @@ def expiring_word_sessions(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    words = (
-        messages.select(
-            F.explode(F.split(F.col("value"), " ")).alias("word"), "ts"
-        )
-        .filter(F.col("word") != "")
-        .withWatermark("ts", watermark)
-    )
+    words = split_words(messages).withWatermark("ts", watermark)
     gap_ms = int(
         {"second": 1000, "seconds": 1000, "minute": 60000, "minutes": 60000}[
             gap.split()[1]
@@ -141,75 +134,6 @@ def expiring_word_sessions(
         stateStructType="n long, first_ms long, last_ms long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs protobuf for its state-server
-    protocol; absent in this environment (no installs allowed)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_word_totals_tws(messages: DataFrame) -> DataFrame:
-    """Same cumulative per-word totals on the transformWithStateInPandas
-    API (the successor to applyInPandasWithState): explicit named state
-    variables on a StatefulProcessor handle instead of a single state
-    tuple. State is a ValueState<total> per word; output and recovery
-    semantics are identical to ``running_word_totals``, which the test
-    asserts by running both.
-
-    Requires the ``protobuf`` package at runtime (Spark's
-    TransformWithStateInPySpark driver worker speaks protobuf to the
-    state server); raises an actionable error when it is missing.
-    """
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(google.protobuf) for Spark's state-server protocol; it is "
-            "not installed in this environment. Use "
-            "running_word_totals (applyInPandasWithState) instead."
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    words = (
-        messages.select(F.explode(F.split(F.col("value"), " ")).alias("word"))
-        .filter(F.col("word") != "")
-    )
-
-    # defined in-closure so cloudpickle serializes the class by value
-    # and workers never need this package importable
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._total = handle.getValueState(
-                "total", StructType([StructField("total", LongType(), True)])
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            batch_count = sum(len(pdf) for pdf in rows)
-            prev = self._total.get()[0] if self._total.exists() else 0
-            total = prev + batch_count
-            self._total.update((total,))
-            yield pd.DataFrame({"word": [key[0]], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    return words.groupBy("word").transformWithStateInPandas(
-        statefulProcessor=TotalsProcessor(),
-        outputStructType="word string, total long",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

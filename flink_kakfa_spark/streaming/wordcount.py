@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _words(
+def split_words(
     frame: DataFrame, text_col: Column | str = "value", keep: tuple[str, ...] = ("ts",)
 ) -> DataFrame:
     """Sentences → one row per non-empty word (split on a single space),
@@ -37,7 +37,7 @@ def _words(
 
 def word_counts(frame: DataFrame, text_col: Column | str = "text") -> DataFrame:
     """split → explode → drop empties → groupBy(word).count()."""
-    words = _words(frame, text_col, keep=())
+    words = split_words(frame, text_col, keep=())
     return words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
 
 
@@ -51,7 +51,7 @@ def _window_counts(messages: DataFrame, win: Column, watermark: str | None) -> D
     if watermark is not None and messages.isStreaming:
         messages = messages.withWatermark("ts", watermark)
     return (
-        _words(messages)
+        split_words(messages)
         .groupBy(win.alias("win"), F.col("word"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(

@@ -106,6 +106,46 @@ def test_md5_prefix_is_spelled_only_in_functions_hashing():
     )
 
 
+def _enclosing_functions(tree: ast.AST) -> dict[int, str]:
+    """Line number -> name of the outermost function that holds it
+    (``ast.walk`` is breadth-first, so outer definitions come first)."""
+    owner = {}
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for n in range(node.lineno, node.end_lineno + 1):
+                owner.setdefault(n, node.name)
+    return owner
+
+
+def test_partial_layout_and_cms_cells_have_one_home():
+    """The streaming monitors' per-batch partial layout is written by
+    ``monitors._stream_partials`` and read by ``monitors._read_partials``
+    only, and the count-min bucket hash is expanded into cells by
+    ``sketches.cms_cells`` only."""
+    monitors = PKG / "streaming" / "monitors.py"
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        text = path.read_text()
+        tree = ast.parse(text)
+        owner = _enclosing_functions(tree)
+        for n, line in enumerate(text.splitlines(), 1):
+            if "batch_id=" in line and not (
+                path == monitors
+                and owner.get(n) in ("_stream_partials", "_read_partials")
+            ):
+                offenders.append(f"{path.relative_to(REPO)}:{n}: {line.strip()}")
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", None) == "_cms_bucket_spark"
+                and owner.get(node.lineno) != "cms_cells"
+            ):
+                offenders.append(
+                    f"{path.relative_to(REPO)}:{node.lineno}: _cms_bucket_spark call"
+                )
+    assert not offenders, "spelled outside its one home:\n" + "\n".join(offenders)
+
+
 def test_entry_module_exposes_driver_contract():
     """__spark_entry__.py must expose entry/queries/oracle_sql."""
     import importlib.util

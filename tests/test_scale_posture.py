@@ -32,7 +32,7 @@ def test_salted_sum_exact_on_skewed_key(spark):
 
 def test_stream_static_join_enriches(spark, tmp_path):
     """J9: streaming word stream joined with a static dimension table."""
-    from flink_kakfa_spark.streaming.wordcount import _words
+    from flink_kakfa_spark.streaming.wordcount import split_words
 
     msgs = spark.createDataFrame(
         [Row(key="k1", value="hello world", ts="2024-01-01 00:00:01")],
@@ -45,7 +45,7 @@ def test_stream_static_join_enriches(spark, tmp_path):
     dim = spark.createDataFrame(
         [Row(word="hello", category="greeting"), Row(word="world", category="noun")]
     )
-    enriched = _words(stream).join(F.broadcast(dim), "word", "left")
+    enriched = split_words(stream).join(F.broadcast(dim), "word", "left")
     name = f"ss_{uuid.uuid4().hex[:8]}"
     q = (
         enriched.writeStream.format("memory")

@@ -307,40 +307,6 @@ def test_stateful_session_state_expires_and_resets(spark, tmp_path):
     ], rows
 
 
-def test_transform_with_state_totals_match_legacy_api(spark, tmp_path):
-    """T7 (modern API): transformWithStateInPandas keeps the same
-    cross-batch totals as the applyInPandasWithState implementation.
-    Skips (with the gate asserted actionable) when protobuf — required
-    by Spark's TWS state-server protocol — is absent."""
-    import time
-
-    from flink_kakfa_spark.streaming.stateful import (
-        running_word_totals_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            running_word_totals_tws(_stream_from(spark, str(tmp_path)))
-        pytest.skip("protobuf absent: transformWithStateInPandas cannot run here")
-
-    _write_messages(
-        spark, str(tmp_path), [Row(key="k1", value="hello world", ts="2024-01-01 00:00:01")], "b0"
-    )
-    time.sleep(1.1)
-    _write_messages(
-        spark, str(tmp_path), [Row(key="k2", value="hello again", ts="2024-01-01 00:00:02")], "b1"
-    )
-    stream = _stream_from(spark, str(tmp_path))
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    _run_to_memory(running_word_totals_tws(stream), name, "update")
-    rows = spark.sql(
-        f"SELECT word, MAX(total) AS total FROM {name} GROUP BY word"
-    ).collect()
-    totals = {r["word"]: r["total"] for r in rows}
-    assert totals == {"hello": 2, "world": 1, "again": 1}
-
-
 def test_consumer_lag_from_kafka_shaped_progress(spark):
     """Offset observability: a Kafka-shaped lastProgress blob flattens
     to per-topic-partition rows with lag = latest - end (the
@@ -782,10 +748,11 @@ def test_streaming_negative_cep_restart_alert_exactly_once(spark, tmp_path):
 def test_streaming_cms_merges_to_batch_sketch(spark, tmp_path):
     """Incremental CMS across micro-batches == one-shot batch CMS, and
     a crash replay of the last batch converges to the same cells."""
-    from flink_kakfa_spark.streaming.sketch import (
-        cms_delta,
-        materialize_cms,
-        read_cms,
+    from flink_kakfa_spark.operators.sketches import cms_cells
+    from flink_kakfa_spark.streaming.monitors import (
+        cms_partial,
+        read_cms_estimates,
+        streaming_cms_monitor,
     )
 
     src = tmp_path / "src"
@@ -797,36 +764,37 @@ def test_streaming_cms_merges_to_batch_sketch(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(MSG_SCHEMA).parquet(f"{src}/*")
-        q = materialize_cms(stream, out, ckpt)
+        q = streaming_cms_monitor(
+            stream.withColumnRenamed("value", "text"), out, ckpt
+        )
         q.awaitTermination(120)
 
     run_once()
     _write_messages(spark, str(src), b1, "b1")
     run_once()  # restart from checkpoint: folds ONLY b1 into the sketch
 
+    exact = {"alpha": 2, "beta": 2, "gamma": 1}
     got = {
-        (r["salt"], r["bucket"]): r["total"]
-        for r in read_cms(spark, out).collect()
+        r["word"]: r["cms_estimate"]
+        for r in read_cms_estimates(spark, out, sorted(exact)).collect()
     }
-    all_words = spark.createDataFrame(
-        [("alpha",), ("alpha",), ("beta",), ("beta",), ("gamma",)], "word string"
+    all_docs = spark.createDataFrame(
+        [("alpha beta alpha",), ("beta gamma",)], "text string"
     )
+    watch = spark.createDataFrame([(w,) for w in exact], "word string")
     want = {
-        (r["salt"], r["bucket"]): r["total"]
-        for r in cms_delta(all_words).collect()
+        r["word"]: r["est"]
+        for r in cms_cells(watch)
+        .join(cms_partial(all_docs), ["salt", "bucket"])
+        .groupBy("word")
+        .agg(F.min("total").alias("est"))
+        .collect()
     }
     assert got == want
 
     # estimate >= exact for every word (CMS one-sided error)
-    from flink_kakfa_spark.operators.sketches import _cms_bucket_spark
-
-    probe = all_words.distinct().select(
-        "word", *[_cms_bucket_spark(F.col("word"), s).alias(f"b{s}") for s in range(3)]
-    )
-    exact = {"alpha": 2, "beta": 2, "gamma": 1}
-    for r in probe.collect():
-        est = min(got[(s, r[f"b{s}"])] for s in range(3))
-        assert est >= exact[r["word"]]
+    for word, est in got.items():
+        assert est >= exact[word]
 
     # idempotent replay: re-running with no new files adds nothing
     before = sorted((tmp_path / "sketch").iterdir())
