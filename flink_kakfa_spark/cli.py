@@ -10,7 +10,9 @@ The reference's user runs ``producer -config cfg.json`` and
   python -m flink_kakfa_spark wordcount --config cfg.json
 
 with the same JSON config schema, the same env overrides
-(KAFKA_BROKER/KAFKA_TOPIC/KAFKA_GROUP_ID, env wins last), the same
+(KAFKA_BROKER/KAFKA_TOPIC, env wins last; the reference's consumer
+``group_id`` is accepted in the file and ignored, since Spark's
+checkpoint owns the offsets), the same
 graceful SIGINT/SIGTERM shutdown (``go/producer/main.go:28-35``) — and
 ``wordcount`` is the missing Flink job: input topic → windowed counts →
 output topic (the topic the reference's consumer already reads,

@@ -3,8 +3,9 @@
 Mirrors the behavior (not the code) of the reference's JSON config
 loaders — producer config at ``go/producer/config.go:11-16`` (broker,
 topic, interval duration-string, word_list) and consumer config at
-``go/consumer/config.go:10-14`` (broker, topic, group_id) — including
-the precedence where defaults fill blanks after the file is read and
+``go/consumer/config.go:10-14`` (broker, topic; its group_id has no
+counterpart here, because Spark's checkpoint holds the offsets a
+consumer group would) — including the precedence where defaults fill blanks after the file is read and
 env vars win last (``go/producer/config.go:20-30,103-111``).
 """
 
@@ -59,7 +60,6 @@ class ConsumerConfig:
 
     broker: str = "localhost:9092"
     topic: str = "word-count-output"  # go/consumer/consumer.go:13
-    group_id: str = "word-count-consumer-group"  # go/consumer/consumer.go:92
 
 
 def _load_json(path: str | None) -> dict:
@@ -95,9 +95,6 @@ def load_consumer_config(path: str | None = None) -> ConsumerConfig:
         cfg.broker = raw["broker"]
     if raw.get("topic"):
         cfg.topic = raw["topic"]
-    if raw.get("group_id"):
-        cfg.group_id = raw["group_id"]
     cfg.broker = os.environ.get("KAFKA_BROKER", cfg.broker)
     cfg.topic = os.environ.get("KAFKA_TOPIC", cfg.topic)
-    cfg.group_id = os.environ.get("KAFKA_GROUP_ID", cfg.group_id)
     return cfg

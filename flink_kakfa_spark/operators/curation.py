@@ -41,7 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.operators.decontam import _shingles4
+from flink_kakfa_spark.functions.shingles import shingle_rows, sql_ngram_rows
+from flink_kakfa_spark.operators.decontam import DECONTAM_K
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
@@ -56,11 +57,7 @@ NEAR_DUP_MIN_OVERLAP = 0.5
       SELECT doc_id, string_split(text, ' ') AS ts FROM documents
     ),
     sh AS (
-      SELECT DISTINCT doc_id,
-        ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] || ' ' || ts[i+3]
-          AS shingle
-      FROM tok, UNNEST(generate_series(1, len(ts) - 3)) AS g(i)
-      WHERE len(ts) >= 4
+      {sql_ngram_rows(DECONTAM_K)}
     ),
     bsh AS (SELECT * FROM sh WHERE doc_id % {INGEST_MOD} = 0),
     ish AS (
@@ -122,13 +119,13 @@ def q_dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     idig = index.select(F.md5("text").alias("dig"))
     exact = idig.join(F.broadcast(bdig), "dig").select("doc_id").distinct()
 
-    bsh = _shingles4(batch)
+    bsh = shingle_rows(batch, DECONTAM_K)
     # same order for shingles: map-side broadcast semi-join against
     # the batch's distinct shingles, THEN dedup the survivors (rows
     # entering the exchange are bounded by index occurrences of
     # batch shingles, not the index's full shingle stream)
     ish = (
-        _shingles4(index)
+        shingle_rows(index, DECONTAM_K)
         .select("shingle")
         .join(F.broadcast(bsh.select("shingle").distinct()), "shingle")
         .distinct()

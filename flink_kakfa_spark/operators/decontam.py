@@ -26,41 +26,29 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
+from flink_kakfa_spark.functions.hashing import md5_prefix
+from flink_kakfa_spark.functions.shingles import (
+    SHINGLE_K,
+    band_key_eq,
+    minhash_bands,
+    minhash_signature,
+    shingle_rows,
+    sql_band_match,
+    sql_minhash_ctes,
+    sql_ngram_rows,
+    sql_word_ngram,
+    word_ngrams,
+)
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
 EVAL_MOD = 101  # doc_id % EVAL_MOD == 0 -> held-out "benchmark" split
-DECONTAM_K = 4  # words per decontamination shingle
-
-
-def _shingles4(df: DataFrame) -> DataFrame:
-    """doc_id + exploded DISTINCT 4-word shingles (docs with >=4 tokens).
-
-    Longer shingles than the 3-gram dedup index: decontamination wants
-    high-precision matches (a shared longer n-gram is strong evidence
-    the benchmark text leaked), not fuzzy similarity. Real pipelines
-    use 8-13; 4 is the precision knee for this fixture's 16-word
-    vocabulary.
-    """
-    # tokens materialized as a column before the HOF references them —
-    # an inline split() re-evaluates per element (SCALE.md winnowing
-    # trap; measured 4.7x on the 3-gram explode)
-    base = df.select("doc_id", F.split(F.col("text"), " ").alias("_toks"))
-    t = F.col("_toks")
-    sh = F.transform(
-        F.sequence(F.lit(1), F.size(t) - (DECONTAM_K - 1)),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(t, i),
-            F.element_at(t, i + 1),
-            F.element_at(t, i + 2),
-            F.element_at(t, i + 3),
-        ),
-    )
-    return base.filter(F.size(t) >= DECONTAM_K).select(
-        "doc_id", F.explode(F.array_distinct(sh)).alias("shingle")
-    )
+# Words per decontamination shingle: longer than the 3-gram dedup index,
+# because decontamination wants high-precision matches (a shared longer
+# n-gram is strong evidence the benchmark text leaked), not fuzzy
+# similarity. Real pipelines use 8-13; 4 is the precision knee for this
+# fixture's 16-word vocabulary.
+DECONTAM_K = 4
 
 
 @query(
@@ -70,11 +58,7 @@ def _shingles4(df: DataFrame) -> DataFrame:
       SELECT doc_id, string_split(text, ' ') AS ts FROM documents
     ),
     sh AS (
-      SELECT DISTINCT doc_id,
-        ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] || ' ' || ts[i+3]
-          AS shingle
-      FROM tok, UNNEST(generate_series(1, len(ts) - 3)) AS g(i)
-      WHERE len(ts) >= 4
+      {sql_ngram_rows(DECONTAM_K)}
     ),
     ev AS (
       SELECT DISTINCT shingle FROM sh WHERE doc_id % {EVAL_MOD} = 0
@@ -105,12 +89,12 @@ def q_decontam_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = parallelize(load_table(spark, "documents", sf_dir), spark)
     is_eval = (F.col("doc_id") % EVAL_MOD) == 0
     ev = (
-        _shingles4(d.filter(is_eval))
+        shingle_rows(d.filter(is_eval), DECONTAM_K)
         .select("shingle")
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    tr = _shingles4(d.filter(~is_eval))
+    tr = shingle_rows(d.filter(~is_eval), DECONTAM_K)
     return (
         tr.join(F.broadcast(ev), "shingle", "left")
         .groupBy("doc_id")
@@ -150,12 +134,12 @@ def _max_run(sorted_arr: Column) -> Column:
 
 @query(
     "text_repetition_ngrams",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id, string_split(text, ' ') AS ts FROM documents
     ),
     bg AS (
-      SELECT doc_id, ts[i] || ' ' || ts[i+1] AS bigram
+      SELECT doc_id, {sql_word_ngram("ts", 2)} AS bigram
       FROM tok, UNNEST(generate_series(1, len(ts) - 1)) AS g(i)
       WHERE len(ts) >= 2
     ),
@@ -191,10 +175,7 @@ def q_text_repetition_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.split(F.col("text"), " ").alias("_toks")
     )  # tokens as a column: an inline split() re-evaluates per HOF element
     t = F.col("_toks")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 1),
-        lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
-    )
+    bigrams = word_ngrams(t, 2)
     n_total = F.size(bigrams)
     n_distinct = F.size(F.array_distinct(bigrams))
     return d.filter(F.size(t) >= 2).select(
@@ -213,60 +194,21 @@ def q_text_repetition_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact n-gram decontamination (above) misses lightly-paraphrased
 # leaks; the production follow-up (e.g. GPT-3 appendix C, Dolma) runs
 # fuzzy dedup BETWEEN the training corpus and the benchmark split.
-# Reuses dedup.py's portable MinHash (16 affine perms over md5 shingle
-# hashes, 4x4 banding) so the whole cross-relation LSH is value-exact
-# under the DuckDB oracle.
-
-from flink_kakfa_spark.operators.dedup import (  # noqa: E402
-    _MH_BANDS,
-    _MH_M,
-    _MH_PERMS,
-    _MH_ROWS,
-    _mh_ab,
-    _MH_SIG_SQL,
-    SHINGLE_K,
-)
-
-_XBAND_JOINS = " OR ".join(
-    "("
-    + " AND ".join(
-        f"tr.s{p} = ev.s{p}" for p in range(band * _MH_ROWS, (band + 1) * _MH_ROWS)
-    )
-    + ")"
-    for band in range(_MH_BANDS)
-)
+# Uses the portable MinHash of functions/shingles.py (16 affine perms
+# over md5 shingle hashes, 4x4 banding) so the whole cross-relation LSH
+# is value-exact under the DuckDB oracle.
 
 
 @query(
     "decontam_minhash",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               generate_series(1, len(ts) - 2),
-               i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]
-             )) AS sharr
-      FROM tok WHERE len(ts) >= 3
-    ),
-    hashed AS (
-      SELECT doc_id, sharr,
-             list_transform(sharr, s -> CAST({sql_md5_prefix('s')} AS BIGINT)) AS hl
-      FROM sh
-    ),
-    sigs AS (
-      SELECT doc_id, sharr,
-      {_MH_SIG_SQL}
-      FROM hashed
-    ),
+    WITH {sql_minhash_ctes()},
     ev AS (SELECT * FROM sigs WHERE doc_id % {EVAL_MOD} = 0),
     tr AS (SELECT * FROM sigs WHERE doc_id % {EVAL_MOD} <> 0),
     cand AS (
       SELECT tr.doc_id AS train_doc, ev.doc_id AS eval_doc,
              tr.sharr AS sh_t, ev.sharr AS sh_e
-      FROM tr JOIN ev ON ({_XBAND_JOINS})
+      FROM tr JOIN ev ON ({sql_band_match("tr", "ev")})
     )
     SELECT
       train_doc, eval_doc,
@@ -294,60 +236,21 @@ def q_decontam_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("tokens") >= SHINGLE_K
     )
     sh = toks.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size("tokens") - (SHINGLE_K - 1)),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at("tokens", i),
-                    F.element_at("tokens", i + 1),
-                    F.element_at("tokens", i + 2),
-                ),
-            )
-        ).alias("sharr"),
+        "doc_id", F.array_distinct(word_ngrams("tokens", SHINGLE_K)).alias("sharr")
     )
     hashed = sh.withColumn("hl", F.transform("sharr", lambda s: md5_prefix(s)))
-
-    def perm_min(p: int):
-        a, b = _mh_ab(p)
-        return F.array_min(
-            F.transform("hl", lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MH_M))
-        ).alias(f"s{p}")
-
-    sigs = hashed.select(
-        "doc_id", "sharr", *[perm_min(p) for p in range(_MH_PERMS)]
-    )
+    sigs = hashed.select("doc_id", "sharr", *minhash_signature("hl"))
     is_eval = (F.col("doc_id") % EVAL_MOD) == 0
 
     def banded(df: DataFrame) -> DataFrame:
-        return df.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(band).alias("band"),
-                            *[
-                                F.col(f"s{p}").alias(f"k{r}")
-                                for r, p in enumerate(
-                                    range(band * _MH_ROWS, (band + 1) * _MH_ROWS)
-                                )
-                            ],
-                        )
-                        for band in range(_MH_BANDS)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("doc_id", "bk.*")
+        return df.select("doc_id", F.explode(minhash_bands()).alias("bk")).select(
+            "doc_id", "bk.*"
+        )
 
     tr_b = banded(sigs.filter(~is_eval)).alias("tr")
     ev_b = banded(sigs.filter(is_eval)).alias("ev")
-    key_eq = F.col("tr.band") == F.col("ev.band")
-    for r in range(_MH_ROWS):
-        key_eq = key_eq & (F.col(f"tr.k{r}") == F.col(f"ev.k{r}"))
     pairs = (
-        tr_b.join(F.broadcast(ev_b), key_eq)
+        tr_b.join(F.broadcast(ev_b), band_key_eq("tr", "ev"))
         .select(
             F.col("tr.doc_id").alias("train_doc"),
             F.col("ev.doc_id").alias("eval_doc"),

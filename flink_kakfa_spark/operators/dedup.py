@@ -23,33 +23,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
+from flink_kakfa_spark.functions.shingles import (
+    MH_BANDS,
+    SHINGLE_K,
+    band_key_eq,
+    minhash_bands,
+    minhash_signature,
+    shingle_rows,
+    sql_band_match,
+    sql_minhash_bands,
+    sql_minhash_ctes,
+    sql_ngram_rows,
+    word_ngrams,
+)
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
-
-SHINGLE_K = 3  # words per shingle
-
-
-def _shingles(df: DataFrame) -> DataFrame:
-    """doc_id + exploded DISTINCT 3-word shingles (docs with ≥3 tokens).
-
-    The token array is materialized as a COLUMN in its own projection
-    before the shingle HOF references it: an inline `split()`
-    expression gets collapsed into the lambda and re-evaluated per
-    element (the SCALE.md winnowing trap) — measured 4.7x on the
-    shingle explode when fixed.
-    """
-    base = df.select("doc_id", F.split(F.col("text"), " ").alias("_toks"))
-    t = F.col("_toks")
-    sh = F.transform(
-        F.sequence(F.lit(1), F.size(t) - (SHINGLE_K - 1)),
-        lambda i: F.concat_ws(
-            " ", F.element_at(t, i), F.element_at(t, i + 1), F.element_at(t, i + 2)
-        ),
-    )
-    return (
-        base.filter(F.size(t) >= SHINGLE_K)
-        .select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
-    )
 
 
 @query(
@@ -98,14 +86,12 @@ def q_dedup_exact_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id, string_split(text, ' ') AS ts FROM documents
     ),
     sh AS (
-      SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
-      FROM tok, UNNEST(generate_series(1, len(ts) - 2)) AS g(i)
-      WHERE len(ts) >= 3
+      {sql_ngram_rows(SHINGLE_K)}
     ),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     pairs AS (
@@ -146,9 +132,7 @@ _GUARD_MAX_DF = 5
       SELECT doc_id, string_split(text, ' ') AS ts FROM documents
     ),
     sh0 AS (
-      SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
-      FROM tok, UNNEST(generate_series(1, len(ts) - 2)) AS g(i)
-      WHERE len(ts) >= 3
+      {sql_ngram_rows(SHINGLE_K)}
     ),
     dfreq AS (SELECT shingle, COUNT(*) AS df FROM sh0 GROUP BY shingle),
     sh AS (
@@ -233,7 +217,7 @@ def _jaccard_pairs_from(
     appearing in more than that many documents are dropped from
     candidate generation AND the Jaccard denominators.
     """
-    sh = _shingles(docs)
+    sh = shingle_rows(docs, SHINGLE_K)
     if max_shingle_df is not None:
         # document frequency via a window count: one shuffle of the
         # shingle set, no second scan / anti-join pass
@@ -306,26 +290,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("tokens"),
     ).filter(F.size("tokens") >= SHINGLE_K)
-    # the WHEN guard makes the expression total: the filter above
-    # removes short docs, but Catalyst may still evaluate a collapsed
-    # projection on pre-filter rows, where the descending sequence
-    # would index element_at out of bounds (ANSI error)
     sh = toks.select(
         "doc_id",
-        F.when(
-            F.size("tokens") >= SHINGLE_K,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("tokens") - (SHINGLE_K - 1)),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at("tokens", i),
-                        F.element_at("tokens", i + 1),
-                        F.element_at("tokens", i + 2),
-                    ),
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>")).alias("shingles"),
+        F.array_distinct(word_ngrams("tokens", SHINGLE_K)).alias("shingles"),
     )
     tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True)
     # localCheckpoint: approxSimilarityJoin re-executes its input plan
@@ -351,69 +318,17 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Portable MinHash: 16 affine permutations over the 32-bit md5-prefix
-# shingle hashes of functions/hashing.py, banded 4x4. Every constant is
-# a literal below so the Spark expressions and the DuckDB oracle compute
-# bit-identical signatures — this is the oracle-checkable twin of the
-# (engine-seeded) pyspark.ml MinHashLSH query above it.
-_MH_PERMS = 16
-_MH_BANDS = 4
-_MH_ROWS = _MH_PERMS // _MH_BANDS
-_MH_M = 2147483647
-
-
-def _mh_ab(p: int) -> tuple[int, int]:
-    """Affine permutation constants (a odd, 0 < a,b < 2^20/M)."""
-    a = (((1103515245 * p + 12345) % 1048575) | 1)
-    b = (22695477 * (p + 1)) % _MH_M
-    return a, b
-
-
-_MH_SIG_SQL = ",\n      ".join(
-    "list_min(list_transform(hl, h -> (h * {a} + {b}) % {m})) AS s{p}".format(
-        a=_mh_ab(p)[0], b=_mh_ab(p)[1], m=_MH_M, p=p
-    )
-    for p in range(_MH_PERMS)
-)
-_MH_BAND_JOINS = " OR ".join(
-    "("
-    + " AND ".join(
-        f"a.s{p} = b.s{p}" for p in range(band * _MH_ROWS, (band + 1) * _MH_ROWS)
-    )
-    + ")"
-    for band in range(_MH_BANDS)
-)
-
-
+# Portable MinHash (functions/shingles.py): the oracle-checkable twin of
+# the (engine-seeded) pyspark.ml MinHashLSH query above.
 @query(
     "dedup_minhash_portable",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               generate_series(1, len(ts) - 2),
-               i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]
-             )) AS sharr
-      FROM tok WHERE len(ts) >= 3
-    ),
-    hashed AS (
-      SELECT doc_id, sharr,
-             list_transform(sharr, s -> CAST({sql_md5_prefix('s')} AS BIGINT)) AS hl
-      FROM sh
-    ),
-    sigs AS (
-      SELECT doc_id, sharr,
-      {_MH_SIG_SQL}
-      FROM hashed
-    ),
+    WITH {sql_minhash_ctes()},
     cand AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              a.sharr AS sh_a, b.sharr AS sh_b
       FROM sigs a JOIN sigs b
-        ON a.doc_id < b.doc_id AND ({_MH_BAND_JOINS})
+        ON a.doc_id < b.doc_id AND ({sql_band_match("a", "b")})
     )
     SELECT
       doc_a, doc_b,
@@ -494,12 +409,9 @@ def q_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = banded.alias("a")
     b_ = banded.alias("b")
-    key_eq = F.col("a.band") == F.col("b.band")
-    for r in range(_MH_ROWS):
-        key_eq = key_eq & (F.col(f"a.k{r}") == F.col(f"b.k{r}"))
     n_common = F.size(F.array_intersect("a.sharr", "b.sharr"))
     cross = (
-        a.join(b_, key_eq & (F.col("a.doc_id") < F.col("b.doc_id")))
+        a.join(b_, band_key_eq("a", "b") & (F.col("a.doc_id") < F.col("b.doc_id")))
         .select(
             (
                 n_common.cast("double")
@@ -530,7 +442,7 @@ def q_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = (
         cross.unionByName(selfc)
         .orderBy(F.col("jaccard").desc(), F.col("doc_a").asc(), F.col("doc_b").asc())
-        .limit(20 * _MH_BANDS)
+        .limit(20 * MH_BANDS)
     )
     return (
         top.dropDuplicates(["doc_a", "doc_b"])
@@ -636,38 +548,12 @@ def _minhash_bands_from(d: DataFrame) -> DataFrame:
         "members",
         F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("tokens"),
     ).filter(F.size("tokens") >= SHINGLE_K)
-    # the WHEN guard makes the expression total: the filter above
-    # removes short docs, but Catalyst may still evaluate a collapsed
-    # projection on pre-filter rows, where the descending sequence
-    # would index element_at out of bounds (ANSI error)
     sh = toks.select(
         "doc_id",
         "members",
-        F.when(
-            F.size("tokens") >= SHINGLE_K,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("tokens") - (SHINGLE_K - 1)),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at("tokens", i),
-                        F.element_at("tokens", i + 1),
-                        F.element_at("tokens", i + 2),
-                    ),
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>")).alias("sharr"),
+        F.array_distinct(word_ngrams("tokens", SHINGLE_K)).alias("sharr"),
     )
     hashed = sh.withColumn("hl", F.transform("sharr", lambda s: md5_prefix(s)))
-    def perm_min(p: int):
-        a, b = _mh_ab(p)
-
-        def apply(h):
-            return (h * F.lit(a) + F.lit(b)) % F.lit(_MH_M)
-
-        return F.array_min(F.transform("hl", apply)).alias(f"s{p}")
-
-    sig_cols = [perm_min(p) for p in range(_MH_PERMS)]
     # Pin the signature frame ONCE before the band explode (round 11):
     # the band self-join plans as a broadcast hash join, so there is
     # no exchange for reuse to dedupe and BOTH sides re-ran the whole
@@ -682,7 +568,7 @@ def _minhash_bands_from(d: DataFrame) -> DataFrame:
     # persisted signature table — same posture as the ``groups``
     # checkpoint upstream.
     sigs = hashed.select(
-        "doc_id", "sharr", "members", *sig_cols
+        "doc_id", "sharr", "members", *minhash_signature("hl")
     ).localCheckpoint()
     # band the signature: 4 bands of 4 ints; docs sharing any band pair
     # up. The explode carries the shingle array and member list WITH
@@ -694,25 +580,7 @@ def _minhash_bands_from(d: DataFrame) -> DataFrame:
     # pair-dedup exchange plus two doc_id re-attach joins — the
     # exchanges that disk-filled the simhash lister pre-r8.
     return sigs.select(
-        "doc_id",
-        "sharr",
-        "members",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        *[
-                            F.col(f"s{p}").alias(f"k{r}")
-                            for r, p in enumerate(
-                                range(band * _MH_ROWS, (band + 1) * _MH_ROWS)
-                            )
-                        ],
-                    )
-                    for band in range(_MH_BANDS)
-                ]
-            )
-        ).alias("bk"),
+        "doc_id", "sharr", "members", F.explode(minhash_bands()).alias("bk")
     ).select("doc_id", "sharr", "members", "bk.*")
 
 
@@ -1225,13 +1093,11 @@ def _near_dup_edges(spark: SparkSession, sf_dir: str, threshold: float = 0.5) ->
 
 @query(
     "dedup_clusters",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE
     tok AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
     sh AS (
-      SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
-      FROM tok, UNNEST(generate_series(1, len(ts) - 2)) AS g(i)
-      WHERE len(ts) >= 3
+      {sql_ngram_rows(SHINGLE_K)}
     ),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     pairs AS (
@@ -1450,7 +1316,7 @@ def propagate_min_labels(sym: DataFrame, checkpoint_every: int = 5) -> DataFrame
 
 @query(
     "dedup_near_unique",
-    oracle="""
+    oracle=f"""
     WITH uniq AS (
       SELECT MIN(doc_id) AS doc_id, text
       FROM documents
@@ -1458,9 +1324,7 @@ def propagate_min_labels(sym: DataFrame, checkpoint_every: int = 5) -> DataFrame
     ),
     tok AS (SELECT doc_id, string_split(text, ' ') AS ts FROM uniq),
     sh AS (
-      SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
-      FROM tok, UNNEST(generate_series(1, len(ts) - 2)) AS g(i)
-      WHERE len(ts) >= 3
+      {sql_ngram_rows(SHINGLE_K)}
     ),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     pairs AS (
@@ -1528,7 +1392,7 @@ def q_dedup_near_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    sh = _shingles(uniq)
+    sh = shingle_rows(uniq, SHINGLE_K)
     # global rare-first canonical order + DICTIONARY ENCODING: each
     # distinct shingle maps to its exact global ROW_NUMBER under
     # (document-frequency, hash-fraction, shingle) — a bijection, so
@@ -2257,60 +2121,25 @@ def q_dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _band_stats_oracle() -> str:
-    per_band = "\n      UNION ALL\n      ".join(
-        "SELECT {band} AS band, {keys} AS bkey FROM sigs".format(
-            band=band,
-            keys="("
-            + " || '_' || ".join(
-                f"CAST(s{p} AS VARCHAR)"
-                for p in range(band * _MH_ROWS, (band + 1) * _MH_ROWS)
-            )
-            + ")",
-        )
-        for band in range(_MH_BANDS)
-    )
-    return f"""
-    WITH tok AS (
-      SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               generate_series(1, len(ts) - 2),
-               i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]
-             )) AS sharr
-      FROM tok WHERE len(ts) >= 3
-    ),
-    hashed AS (
-      SELECT doc_id,
-             list_transform(sharr, s -> CAST({sql_md5_prefix('s')} AS BIGINT)) AS hl
-      FROM sh
-    ),
-    sigs AS (
-      SELECT doc_id,
-      {_MH_SIG_SQL}
-      FROM hashed
-    ),
-    bands AS (
-      {per_band}
-    ),
+@query(
+    "dedup_lsh_band_stats",
+    oracle=f"""
+    WITH {sql_minhash_ctes()},
     buckets AS (
-      SELECT band, bkey, CAST(COUNT(*) AS BIGINT) AS n
-      FROM bands GROUP BY band, bkey
+      SELECT bk, CAST(COUNT(*) AS BIGINT) AS n
+      FROM (SELECT UNNEST({sql_minhash_bands()}) AS bk FROM sigs)
+      GROUP BY bk
     )
     SELECT
-      CAST(band AS INT) AS band,
+      CAST(bk.band AS INT) AS band,
       CAST(COUNT(*) AS BIGINT) AS n_buckets,
       CAST(SUM(n) AS BIGINT) AS n_docs,
       CAST(MAX(n) AS BIGINT) AS max_bucket,
       CAST(SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS singletons,
       CAST(SUM(n * (n - 1) / 2) AS BIGINT) AS candidate_pairs
-    FROM buckets GROUP BY band ORDER BY band
-    """
-
-
-@query("dedup_lsh_band_stats", oracle=_band_stats_oracle())
+    FROM buckets GROUP BY bk.band ORDER BY band
+    """,
+)
 def q_dedup_lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH tuning diagnostics for the portable MinHash pipeline: per
     band, the bucket census that decides whether the (bands x rows)
@@ -2324,68 +2153,26 @@ def q_dedup_lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join that query would run.
 
     Scale: signatures are one narrow pass; the census is a two-level
-    hash aggregate on (band, band-key) then band — never materializes
-    a candidate pair.
+    hash aggregate on the (band, k0..k3) struct then band — never
+    materializes a candidate pair.
     """
     d = parallelize(load_table(spark, "documents", sf_dir), spark).select(
         "doc_id",
         F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("_toks"),
     )  # tokens as a column: an inline split() re-evaluates per HOF element
-    toks = F.col("_toks")
     sh = d.select(
         "doc_id",
-        F.when(
-            F.size(toks) >= SHINGLE_K,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - (SHINGLE_K - 1)),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at(toks, i),
-                        F.element_at(toks, i + 1),
-                        F.element_at(toks, i + 2),
-                    ),
-                )
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("sharr"),
+        F.array_distinct(word_ngrams("_toks", SHINGLE_K)).alias("sharr"),
     ).filter(F.size("sharr") > 0)
     hashed = sh.withColumn("hl", F.transform("sharr", lambda s: md5_prefix(s)))
-
-    def perm_min(p: int):
-        a, b = _mh_ab(p)
-        return F.array_min(
-            F.transform("hl", lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MH_M))
-        ).alias(f"s{p}")
-
-    sigs = hashed.select("doc_id", *[perm_min(p) for p in range(_MH_PERMS)])
-    bands = sigs.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.concat_ws(
-                            "_",
-                            *[
-                                F.col(f"s{p}").cast("string")
-                                for p in range(
-                                    band * _MH_ROWS, (band + 1) * _MH_ROWS
-                                )
-                            ],
-                        ).alias("bkey"),
-                    )
-                    for band in range(_MH_BANDS)
-                ]
-            )
-        ).alias("b")
-    ).select("b.band", "b.bkey")
-    buckets = bands.groupBy("band", "bkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
+    sigs = hashed.select("doc_id", *minhash_signature("hl"))
+    buckets = (
+        sigs.select(F.explode(minhash_bands()).alias("bk"))
+        .groupBy("bk")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
     return (
-        buckets.groupBy(F.col("band").cast("int").alias("band"))
+        buckets.groupBy(F.col("bk.band").cast("int").alias("band"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_buckets"),
             F.sum("n").cast("long").alias("n_docs"),

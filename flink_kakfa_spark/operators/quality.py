@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.operators.dedup import _shingles
+from flink_kakfa_spark.functions.shingles import SHINGLE_K, shingle_rows, sql_ngram_rows
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
@@ -127,14 +127,12 @@ def q_quality_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_containment_score",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id, string_split(text, ' ') AS ts FROM documents
     ),
     sh AS (
-      SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
-      FROM tok, UNNEST(generate_series(1, len(ts) - 2)) AS g(i)
-      WHERE len(ts) >= 3
+      {sql_ngram_rows(SHINGLE_K)}
     ),
     dfreq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle)
     SELECT
@@ -157,7 +155,9 @@ def q_quality_containment_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (containment = 1.0) is boilerplate; this is the corpus-level dual
     of pairwise near-dup detection — O(n·shingles), never O(n²).
     """
-    sh = _shingles(parallelize(load_table(spark, "documents", sf_dir), spark))
+    sh = shingle_rows(
+        parallelize(load_table(spark, "documents", sf_dir), spark), SHINGLE_K
+    )
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     return (
         sh.join(dfreq, "shingle")

@@ -18,6 +18,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_kakfa_spark.functions.hashing import md5_prefix, sql_md5_prefix
+from flink_kakfa_spark.functions.shingles import (
+    ROLL_B,
+    ROLL_M,
+    SHINGLE_K,
+    shingle_rows,
+    sql_ngram_rows,
+    sql_word_ngram,
+    word_ngrams,
+)
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
@@ -177,11 +186,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Rolling fingerprint over the portable md5 token hash
-# (functions/hashing.py).
-_ROLL_B = 1000003          # polynomial base
-_ROLL_M = 2147483647       # 2^31-1: keeps acc*B + h inside BIGINT exactly
-
-
+# (functions/hashing.py), with the polynomial of functions/shingles.py.
 @query(
     "text_fingerprint_rolling",
     oracle=f"""
@@ -193,7 +198,7 @@ _ROLL_M = 2147483647       # 2^31-1: keeps acc*B + h inside BIGINT exactly
           list_transform(string_split(text, ' '),
                          w -> CAST({sql_md5_prefix('w')} AS BIGINT))
         ),
-        (acc, x) -> (acc * {_ROLL_B} + x) % {_ROLL_M}
+        (acc, x) -> (acc * {ROLL_B} + x) % {ROLL_M}
       ) AS rolling_fp
     FROM documents
     """,
@@ -212,7 +217,7 @@ def q_text_fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolled = F.aggregate(
         tokens(),
         F.lit(0).cast("long"),
-        lambda acc, w: (acc * F.lit(_ROLL_B) + md5_prefix(w)) % F.lit(_ROLL_M),
+        lambda acc, w: (acc * F.lit(ROLL_B) + md5_prefix(w)) % F.lit(ROLL_M),
     )
     return d.select("doc_id", rolled.alias("rolling_fp"))
 
@@ -241,10 +246,10 @@ def q_text_token_count_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_bigram_top20",
-    oracle="""
+    oracle=f"""
     WITH tok AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
     bg AS (
-      SELECT ts[i] || ' ' || ts[i+1] AS bigram
+      SELECT {sql_word_ngram("ts", 2)} AS bigram
       FROM tok, UNNEST(generate_series(1, len(ts) - 1)) AS g(i)
       WHERE len(ts) >= 2
     )
@@ -262,13 +267,9 @@ def q_text_bigram_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.col("text"), " ").alias("_toks")
     )  # tokens as a column: an inline split() re-evaluates per HOF element
     t = F.col("_toks")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 1),
-        lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
-    )
     return (
         d.filter(F.size(t) >= 2)
-        .select(F.explode(bigrams).alias("bigram"))
+        .select(F.explode(word_ngrams(t, 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("bigram").asc())
@@ -753,15 +754,12 @@ def q_text_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_ngram_coverage",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id, source, string_split(text, ' ') AS ts FROM documents
     ),
     sh AS (
-      SELECT DISTINCT doc_id, source,
-             ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
-      FROM tok, UNNEST(generate_series(1, len(ts) - 2)) AS g(i)
-      WHERE len(ts) >= 3
+      {sql_ngram_rows(SHINGLE_K, "doc_id, source")}
     ),
     df AS (
       SELECT shingle, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
@@ -802,23 +800,8 @@ def q_text_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-threaded into the groupBy's map side — one round-robin
     # exchange engages every core (measured 1.38 s -> 0.95 s minima at
     # sf0.1; a no-op at lake scale where scans arrive in many splits).
-    d = parallelize(load_table(spark, "documents", sf_dir), spark).select(
-        "doc_id", "source", F.split(F.col("text"), " ").alias("_toks")
-    )  # tokens as a column: an inline split() re-evaluates per HOF
-    # element (measured 4.7x on this explode)
-    t = F.col("_toks")
-    sh_arr = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(t, i),
-            F.element_at(t, i + 1),
-            F.element_at(t, i + 2),
-        ),
-    )
-    sh = d.filter(F.size(t) >= 3).select(
-        "doc_id", "source", F.explode(F.array_distinct(sh_arr)).alias("shingle")
-    )
+    d = parallelize(load_table(spark, "documents", sf_dir), spark)
+    sh = shingle_rows(d, SHINGLE_K, keep=("doc_id", "source"))
     # ONE shingle-keyed shuffle: document frequency and the (bounded,
     # <=|sources|) source set aggregate together, then explode the
     # source set — no second distinct + join back on the vocab.

@@ -33,13 +33,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_kakfa_spark.functions.hashing import spark_sql_md5_prefix, sql_md5_prefix
-from flink_kakfa_spark.operators.text import _ROLL_B, _ROLL_M
+from flink_kakfa_spark.functions.shingles import roll3
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table
 
 _LAMBDA = 0.75  # Jelinek-Mercer interpolation weight on the bigram term
 
 _WINNOW_W = 4   # window: one fingerprint per 4 consecutive k-gram hashes
+
+# DuckDB (doc_id, i, fp): the window-of-W minimum ending at each 3-gram
+# rolling hash; full windows are those with i >= W
+_WINNOW_WINS_SQL = f"""d AS (
+      SELECT doc_id,
+             list_transform(string_split(text, ' '),
+                            w -> CAST({sql_md5_prefix('w')} AS BIGINT)) AS hs
+      FROM documents
+    ),
+    kg AS (
+      SELECT doc_id, g.i, {roll3("hs", "g.i")} AS kh
+      FROM d, UNNEST(generate_series(1, len(hs) - 2)) AS g(i)
+      WHERE len(hs) >= 3
+    ),
+    wins AS (
+      SELECT doc_id, i,
+             MIN(kh) OVER (PARTITION BY doc_id ORDER BY i
+                           ROWS BETWEEN {_WINNOW_W - 1} PRECEDING
+                           AND CURRENT ROW) AS fp
+      FROM kg
+    )"""
 
 # phase-1 mini-prefix of the adaptive top-k pair join: fingerprints
 # indexed per doc while seeding the 20th-best-score lower bound
@@ -75,9 +96,7 @@ def _winnow_fparr_from(docs: DataFrame) -> DataFrame:
       array(transform(split(text, ' '), w -> {spark_sql_md5_prefix('w')})), hsv ->
       flatten(transform(
         array(CASE WHEN size(hsv) >= 3 THEN
-          transform(sequence(0, size(hsv) - 3),
-            j -> ((((hsv[j] % {_ROLL_M}) * {_ROLL_B} + hsv[j + 1])
-                   % {_ROLL_M}) * {_ROLL_B} + hsv[j + 2]) % {_ROLL_M})
+          transform(sequence(0, size(hsv) - 3), j -> {roll3("hsv", "j")})
           ELSE array() END), karr ->
         CASE WHEN size(karr) >= {_WINNOW_W} THEN
           transform(sequence({_WINNOW_W - 1}, size(karr) - 1),
@@ -197,26 +216,7 @@ def q_text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_winnow_fingerprints",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id,
-             list_transform(string_split(text, ' '),
-                            w -> CAST({sql_md5_prefix('w')} AS BIGINT)) AS hs
-      FROM documents
-    ),
-    kg AS (
-      SELECT doc_id, g.i,
-             ((((hs[g.i] % {_ROLL_M}) * {_ROLL_B} + hs[g.i + 1]) % {_ROLL_M})
-              * {_ROLL_B} + hs[g.i + 2]) % {_ROLL_M} AS kh
-      FROM d, UNNEST(generate_series(1, len(hs) - 2)) AS g(i)
-      WHERE len(hs) >= 3
-    ),
-    wins AS (
-      SELECT doc_id, i,
-             MIN(kh) OVER (PARTITION BY doc_id ORDER BY i
-                           ROWS BETWEEN {_WINNOW_W - 1} PRECEDING
-                           AND CURRENT ROW) AS fp
-      FROM kg
-    ),
+    WITH {_WINNOW_WINS_SQL},
     fps AS (
       SELECT DISTINCT doc_id, fp FROM wins WHERE i >= {_WINNOW_W}
     )
@@ -509,26 +509,7 @@ _WINNOW_DF_CAP = 20  # fingerprints in more docs than this are boilerplate
 @query(
     "text_winnow_guarded",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id,
-             list_transform(string_split(text, ' '),
-                            w -> CAST({sql_md5_prefix('w')} AS BIGINT)) AS hs
-      FROM documents
-    ),
-    kg AS (
-      SELECT doc_id, g.i,
-             ((((hs[g.i] % {_ROLL_M}) * {_ROLL_B} + hs[g.i + 1]) % {_ROLL_M})
-              * {_ROLL_B} + hs[g.i + 2]) % {_ROLL_M} AS kh
-      FROM d, UNNEST(generate_series(1, len(hs) - 2)) AS g(i)
-      WHERE len(hs) >= 3
-    ),
-    wins AS (
-      SELECT doc_id, i,
-             MIN(kh) OVER (PARTITION BY doc_id ORDER BY i
-                           ROWS BETWEEN {_WINNOW_W - 1} PRECEDING
-                           AND CURRENT ROW) AS fp
-      FROM kg
-    ),
+    WITH {_WINNOW_WINS_SQL},
     fps0 AS (
       SELECT DISTINCT doc_id, fp FROM wins WHERE i >= {_WINNOW_W}
     ),

@@ -32,7 +32,9 @@ def get_spark(
     1000-executor cluster, except ``master``/partition counts which are
     sized for the local test harness.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # one task slot per core this process may run on (SPARK_GRAFT_CPUS
+    # overrides, e.g. for a benchmark pinned to fewer cores)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     # Local mode defaults to a 1g driver heap regardless of machine RAM —
     # in local mode the "driver" heap IS all executor memory, so size it
     # to the machine: a quarter of RAM, leaving room for the Python

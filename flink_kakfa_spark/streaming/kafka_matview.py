@@ -71,7 +71,10 @@ def current_counts(spark: SparkSession, state_dir: str) -> DataFrame | None:
     commit = _read_commit(state_dir)
     if commit["version"] == 0:
         return None
-    return spark.read.parquet(os.path.join(state_dir, f"v{commit['version']}"))
+    # the fixed schema saves a schema-inference job per increment
+    return spark.read.schema("word string, cnt bigint").parquet(
+        os.path.join(state_dir, f"v{commit['version']}")
+    )
 
 
 def consume_wordcount_increment(

@@ -106,6 +106,46 @@ def test_md5_prefix_is_spelled_only_in_functions_hashing():
     )
 
 
+def test_shingles_and_minhash_are_spelled_only_in_functions_shingles():
+    """Word n-grams and the portable MinHash have one home: operators
+    call functions/shingles.py for both engines' forms and import none
+    of these pieces as a private name from another operator module."""
+    import re
+
+    home = PKG / "functions" / "shingles.py"
+    spellings = [
+        re.compile(r"element_at\([^()]*,\s*i \+ [12]\)"),  # Spark n-gram lambda
+        re.compile(r"\[i\] \|\| ' ' \|\|"),  # DuckDB n-gram
+        re.compile(r"_mh_ab\(|list_min\(list_transform\(hl"),  # MinHash
+    ]
+    piece = re.compile(r"(?i)shingl|ngram|minhash|_mh|band|roll")
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == home:
+            continue
+        text = path.read_text()
+        offenders += [
+            f"{path.relative_to(REPO)}:{n}: {line.strip()}"
+            for n, line in enumerate(text.splitlines(), 1)
+            if any(s.search(line) for s in spellings)
+        ]
+        if path.parent.name != "operators":
+            continue
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+                "flink_kakfa_spark.operators"
+            ):
+                offenders += [
+                    f"{path.relative_to(REPO)}:{node.lineno}: imports {a.name}"
+                    f" from {node.module}"
+                    for a in node.names
+                    if a.name.startswith("_") and piece.search(a.name)
+                ]
+    assert not offenders, "spelled outside functions/shingles.py:\n" + "\n".join(
+        offenders
+    )
+
+
 def _enclosing_functions(tree: ast.AST) -> dict[int, str]:
     """Line number -> name of the outermost function that holds it
     (``ast.walk`` is breadth-first, so outer definitions come first)."""

@@ -23,7 +23,16 @@ def test_defaults_match_reference():
     assert cfg.word_list == DEFAULT_WORD_LIST    # go/producer/producer.go:19-23
     ccfg = load_consumer_config(None)
     assert ccfg.topic == "word-count-output"     # go/consumer/consumer.go:13
-    assert ccfg.group_id == "word-count-consumer-group"  # go/consumer/consumer.go:92
+
+
+def test_reference_consumer_config_with_group_id_loads(tmp_path):
+    """The reference's consumer config carries a group_id; Spark's
+    checkpoint owns the offsets instead, so the key is ignored."""
+    p = tmp_path / "consumer.json"
+    p.write_text(json.dumps({"broker": "b:9092", "group_id": "g"}))
+    ccfg = load_consumer_config(str(p))
+    assert ccfg.broker == "b:9092"
+    assert not hasattr(ccfg, "group_id")
 
 
 def test_file_overrides_defaults(tmp_path):
