@@ -2,9 +2,11 @@
 
 Engine-level choices we own (SURVEY.md §4): AQE on (runtime re-planning,
 skew-join splitting), UTC session timezone (timestamp results hash-match
-the DuckDB oracle), Arrow enabled for the few pandas-UDF paths, and a
-shuffle-partition count sized to the data (tiny for unit tests, matched
-to cores for bench; at real cluster scale AQE coalesces automatically).
+the DuckDB oracle), Arrow enabled for the pandas-UDF paths and for the
+Kafka data plane, whose records cross between the driver and the JVM as
+one Arrow table, and a shuffle-partition count sized to the data (tiny
+for unit tests, matched to cores for bench; at real cluster scale AQE
+coalesces automatically).
 """
 
 from __future__ import annotations
@@ -52,7 +54,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Deterministic timestamp semantics vs the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow batch transfer for pandas UDF / toPandas paths.
+        # Arrow batch transfer for pandas UDF / toPandas / toArrow paths.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",

@@ -4,15 +4,20 @@ Completes the reference's produce/consume surface (S2/S3) with no
 Kafka connector jar; ``kafka.py`` builds the stream source on the same
 wire calls. The wire code runs on the driver: an increment of a few
 thousand records costs less to move there than one Spark job costs to
-schedule.
+schedule. Records cross between the driver and the JVM as one Arrow
+table each way, so the data plane starts no Python worker: a frame
+built from a Python row list would put a ``PythonRDD`` in its lineage
+and send every job over it through one.
 
 - ``snapshot_and_drain`` — the one read both readers share: snapshot
   every partition's end offset with ListOffsets, then fetch
   [start, end) per partition.
-- ``read_topic_incremental`` — that read as a frame of (key, value,
-  topic, partition, offset, timestamp_ms), plus the end offsets.
-- ``write_topic``  — produce: record *i* goes to Kafka partition
-  *i mod n*, in bounded record batches.
+- ``read_topic_incremental`` — that read as a frame of ``READ_SCHEMA``
+  (key, value, topic, partition, offset, timestamp_ms), built from one
+  Arrow table, plus the end offsets.
+- ``write_topic``  — produce: the rows come back as one Arrow table and
+  record *i* goes to Kafka partition *i mod n*, in bounded record
+  batches.
 - ``foreach_batch_sink`` — adapter so a streaming query can sink to
   Kafka through ``writeStream.foreachBatch``, keyed by the batch's
   ``key`` column when it has one (exactly-once per batch id is the
@@ -26,6 +31,7 @@ per-record round-robin ``write_topic`` implements.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,9 +49,15 @@ from flink_kakfa_spark.streaming.wire import (
     produce,
 )
 
-READ_SCHEMA = (
-    "key binary, value binary, topic string, partition int, "
-    "offset long, timestamp_ms long"
+READ_SCHEMA = pa.schema(
+    [
+        ("key", pa.binary()),
+        ("value", pa.binary()),
+        ("topic", pa.string()),
+        ("partition", pa.int32()),
+        ("offset", pa.int64()),
+        ("timestamp_ms", pa.int64()),
+    ]
 )
 
 _PRODUCE_CHUNK = 500  # records per Produce RPC
@@ -109,14 +121,18 @@ def read_topic_incremental(
     goes back to the broker.
     """
     records, end = snapshot_and_drain(bootstrap, topic, start_offsets or {})
-    rows = [
-        (r.key, r.value, topic, p, r.offset, r.timestamp_ms) for p, r in records
-    ]
-    return spark.createDataFrame(rows, READ_SCHEMA), end
-
-
-def _bytes(v) -> bytes | None:
-    return None if v is None else bytes(v)
+    table = pa.table(
+        {
+            "key": [r.key for _, r in records],
+            "value": [r.value for _, r in records],
+            "topic": [topic] * len(records),
+            "partition": [p for p, _ in records],
+            "offset": [r.offset for _, r in records],
+            "timestamp_ms": [r.timestamp_ms for _, r in records],
+        },
+        schema=READ_SCHEMA,
+    )
+    return spark.createDataFrame(table), end
 
 
 def write_topic(
@@ -128,23 +144,26 @@ def write_topic(
 ) -> int:
     """Produce every row of ``df``; returns the number of records written.
 
-    The rows are collected once; record *i* goes to Kafka partition
-    *i mod n* in ``_PRODUCE_CHUNK``-record batches (bounded RPC frames
-    however many rows ``df`` holds).
+    The rows are collected once, as one Arrow table; record *i* goes to
+    Kafka partition *i mod n* in ``_PRODUCE_CHUNK``-record batches
+    (bounded RPC frames however many rows ``df`` holds).
     """
     n_kafka = len(partition_ids(bootstrap, topic))
     cols = [F.col(value_col).cast("binary").alias("value")]
     if key_col is not None:
         cols.append(F.col(key_col).cast("binary").alias("key"))
-    rows = df.select(*cols).collect()
+    table = df.select(*cols).toArrow()
+    values = table.column("value").to_pylist()
+    keys = (
+        table.column("key").to_pylist()
+        if key_col is not None
+        else [None] * len(values)
+    )
     for p in range(n_kafka):
-        records = [
-            (_bytes(r["key"]) if key_col is not None else None, _bytes(r["value"]))
-            for r in rows[p::n_kafka]
-        ]
+        records = list(zip(keys[p::n_kafka], values[p::n_kafka]))
         for i in range(0, len(records), _PRODUCE_CHUNK):
             produce(bootstrap, topic, records[i : i + _PRODUCE_CHUNK], partition=p)
-    return len(rows)
+    return len(values)
 
 
 def foreach_batch_sink(bootstrap: str, topic: str):

@@ -125,6 +125,7 @@ class Record(NamedTuple):
 
 
 _COMPRESSION_GZIP = 1  # attributes bits 0-2 (spec: 0=none, 1=gzip)
+_CONTROL_BATCH = 0x20  # attributes bit 5: transaction markers, no data
 
 
 def encode_record_batch(
@@ -187,11 +188,18 @@ def encode_record_batch(
     return struct.pack(">qi", base_offset, len(after_length)) + after_length
 
 
-def decode_record_batches(buf: bytes) -> list[Record]:
-    """All records from a (possibly multi-batch) record set; verifies
-    each batch's CRC-32C. Tolerates a trailing partial batch (brokers
-    may truncate the last batch at max_bytes)."""
+def decode_record_set(buf: bytes) -> tuple[list[Record], int]:
+    """All data records from a (possibly multi-batch) record set, plus
+    the offset just past its last whole batch (-1 when none is whole);
+    verifies each batch's CRC-32C. Tolerates a trailing partial batch
+    (brokers may truncate the last batch at max_bytes).
+
+    A control batch (attributes bit 5: a transaction's commit or abort
+    marker) holds no data records, so none of its records are returned,
+    but it still moves the next offset past the offsets it occupies.
+    """
     out: list[Record] = []
+    next_offset = -1
     pos = 0
     while pos + 12 <= len(buf):
         base_offset, batch_len = struct.unpack_from(">qi", buf, pos)
@@ -205,7 +213,11 @@ def decode_record_batches(buf: bytes) -> list[Record]:
         post = buf[start + 9 : end]
         if crc32c(post) != crc:
             raise TopicAdminError("record batch CRC-32C mismatch")
-        attrs, _last_delta, base_ts, _max_ts = struct.unpack_from(">hiqq", post, 0)
+        attrs, last_delta, base_ts, _max_ts = struct.unpack_from(">hiqq", post, 0)
+        pos = end
+        next_offset = max(next_offset, base_offset + last_delta + 1)
+        if attrs & _CONTROL_BATCH:
+            continue
         # post-crc fixed fields: attrs(2) lastOffsetDelta(4) baseTs(8)
         # maxTs(8) producerId(8) producerEpoch(2) baseSequence(4) = 36
         (count,) = struct.unpack_from(">i", post, 36)
@@ -249,8 +261,12 @@ def decode_record_batches(buf: bytes) -> list[Record]:
                 )
             )
             rpos = rend
-        pos = end
-    return out
+    return out, next_offset
+
+
+def decode_record_batches(buf: bytes) -> list[Record]:
+    """The data records of ``decode_record_set``."""
+    return decode_record_set(buf)[0]
 
 
 # ------------------------------------------------------------ Produce v3
@@ -310,6 +326,22 @@ def fetch(
     max_wait_ms: int = 500,
 ) -> tuple[list[Record], int]:
     """Fetch v4 from ``offset``: returns (records, high_watermark)."""
+    records, _, hwm = _fetch(
+        bootstrap, topic, partition, offset, max_bytes, max_wait_ms
+    )
+    return records, hwm
+
+
+def _fetch(
+    bootstrap: str,
+    topic: str,
+    partition: int,
+    offset: int,
+    max_bytes: int = 8 * 1024 * 1024,
+    max_wait_ms: int = 500,
+) -> tuple[list[Record], int, int]:
+    """``fetch``, plus the offset just past the last whole batch served
+    (``decode_record_set``; -1 when there is none)."""
     body = (
         struct.pack(">iiii", -1, max_wait_ms, 1, max_bytes)  # replica/wait/min/max
         + struct.pack(">b", 0)  # isolation_level: read_uncommitted
@@ -321,6 +353,7 @@ def fetch(
     rd = _rpc(_addr(bootstrap), API_FETCH, 4, body, **_DATA_RPC)
     rd.i32()  # throttle_time_ms (first in Fetch v1+)
     records: list[Record] = []
+    next_offset = -1
     hwm = 0
     for _ in range(rd.i32()):
         name = rd.string()
@@ -338,8 +371,8 @@ def fetch(
                 if err != 0:
                     raise TopicAdminError(f"Fetch({topic}/{pid}) error {err}")
                 hwm = p_hwm
-                records.extend(decode_record_batches(record_set))
-    return records, hwm
+                records, next_offset = decode_record_set(record_set)
+    return records, next_offset, hwm
 
 
 def fetch_range(
@@ -347,23 +380,24 @@ def fetch_range(
 ) -> list[Record]:
     """Every record with offset in [lo, hi), in offset order.
 
-    ``hi`` comes from an earlier ListOffsets, so a fetch with nothing
-    at or past the current offset is a short read: raise rather than
-    let the caller commit ``hi`` over records it never saw. Records
-    past ``hi`` (offsets compacted away below it) end the range.
+    ``hi`` comes from an earlier ListOffsets, so a fetch with no whole
+    batch past the current offset is a short read: raise rather than
+    let the caller commit ``hi`` over records it never saw. The cursor
+    moves batch by batch, so a control batch (which yields no records)
+    still advances it, and offsets compacted away inside a batch are
+    skipped; a batch reaching past ``hi`` ends the range.
     """
     out: list[Record] = []
     offset = lo
     while offset < hi:
-        records, _ = fetch(bootstrap, topic, partition, offset)
-        fresh = [r for r in records if r.offset >= offset]
-        if not fresh:
+        records, next_offset, _ = _fetch(bootstrap, topic, partition, offset)
+        if next_offset <= offset:
             raise TopicAdminError(
                 f"Fetch({topic}/{partition}) returned nothing at offset "
                 f"{offset}, below end offset {hi}"
             )
-        out.extend(r for r in fresh if r.offset < hi)
-        offset = fresh[-1].offset + 1
+        out.extend(r for r in records if offset <= r.offset < hi)
+        offset = next_offset
     return out
 
 

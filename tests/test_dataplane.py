@@ -120,7 +120,65 @@ def test_fetch_range_raises_on_short_read(broker):
         fetch_range(broker.addr, "t", 0, 0, 2)
 
 
+def _commit_marker(base_offset: int) -> bytes:
+    """A transaction COMMIT marker: ``encode_record_batch``'s layout with
+    attributes bits 4 (transactional) and 5 (control) set, re-checksummed.
+    Its one record's key is (version 0, type 1 = commit)."""
+    import struct
+
+    batch = encode_record_batch(
+        [(struct.pack(">hh", 0, 1), struct.pack(">hi", 0, 0))],
+        base_offset=base_offset,
+        timestamp_ms=1,
+    )
+    post = bytearray(batch[21:])  # everything after the crc field
+    struct.pack_into(">h", post, 0, 0x30)
+    return batch[:17] + struct.pack(">I", crc32c(bytes(post))) + bytes(post)
+
+
+def _append_marker(broker, topic: str, pid: int = 0) -> None:
+    """Store a commit marker at the partition's next offset, as a
+    transactional producer's commit would."""
+    with broker.lock:
+        part = broker.topics[topic][pid]
+        part["batches"].append((part["next"], _commit_marker(part["next"])))
+        part["next"] += 1
+
+
+def test_control_batch_is_skipped_but_advances_the_range(broker):
+    """A control batch holds transaction markers, not records: decoding
+    returns none of it, and a range that ends in one is read whole
+    rather than failed as a short read."""
+    data = encode_record_batch([(None, b"w1"), (None, b"w2")], base_offset=0)
+    assert [r.value for r in decode_record_batches(data + _commit_marker(2))] == [
+        b"w1",
+        b"w2",
+    ]
+
+    broker.add_topic("txn", 1)
+    produce(broker.addr, "txn", [(None, b"w1"), (None, b"w2")])
+    _append_marker(broker, "txn")
+    hi = list_offset(broker.addr, "txn", 0, LATEST)
+    assert hi == 3
+    assert [r.value for r in fetch_range(broker.addr, "txn", 0, 0, hi)] == [
+        b"w1",
+        b"w2",
+    ]
+    assert fetch_range(broker.addr, "txn", 0, 2, hi) == []
+
+
 # ------------------------------------------------------ Spark data plane
+
+READ_DDL = (
+    "key binary, value binary, topic string, partition int, "
+    "offset long, timestamp_ms long"
+)
+
+
+def _read_struct():
+    from pyspark.sql.types import StructType
+
+    return StructType.fromDDL(READ_DDL)
 
 
 def test_spark_read_topic_distributed(spark, broker):
@@ -361,6 +419,54 @@ def test_read_topic_incremental_frame_never_refetches(spark, broker):
     assert sorted(bytes(r["value"]) for r in df.collect()) == [b"a0", b"a1", b"b0"]
 
 
+def test_read_frame_comes_from_one_arrow_table(spark, broker):
+    """The increment frame has the read schema, nullability included,
+    and no PythonRDD in its lineage: no job over it starts a Python
+    worker."""
+    from flink_kakfa_spark.streaming.dataplane import read_topic_incremental
+
+    broker.add_topic("arrow", 2)
+    produce(broker.addr, "arrow", [(b"k", b"a0"), (None, b"a1")], 0)
+    produce(broker.addr, "arrow", [(None, b"b0")], 1)
+    df, end = read_topic_incremental(spark, broker.addr, "arrow")
+    assert end == {0: 2, 1: 1}
+    assert df.schema == _read_struct()
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert {
+        (r["key"] and bytes(r["key"]), bytes(r["value"]), r["partition"], r["offset"])
+        for r in df.collect()
+    } == {(b"k", b"a0", 0, 0), (None, b"a1", 0, 1), (None, b"b0", 1, 0)}
+
+
+def test_empty_read_leaves_the_view_commit_unchanged(spark, broker, tmp_path):
+    """A read with no new records is an empty frame of the read schema,
+    and an increment over it commits nothing."""
+    import os
+
+    from flink_kakfa_spark.streaming.dataplane import read_topic_incremental
+    from flink_kakfa_spark.streaming.kafka_matview import consume_wordcount_increment
+
+    broker.add_topic("idle", 2)
+    df, end = read_topic_incremental(spark, broker.addr, "idle")
+    assert end == {0: 0, 1: 0}
+    assert df.schema == _read_struct() and df.count() == 0
+
+    state = str(tmp_path / "state")
+    produce(broker.addr, "idle", [(None, b"alpha beta")], 1)
+    c = consume_wordcount_increment(spark, broker.addr, "idle", state)
+    assert c["new_rows"] == 1
+    df, _ = read_topic_incremental(spark, broker.addr, "idle", {0: 0, 1: 1})
+    assert df.schema == _read_struct() and df.count() == 0
+
+    commit_path = os.path.join(state, "commit.json")
+    with open(commit_path, "rb") as f:
+        before = f.read()
+    c = consume_wordcount_increment(spark, broker.addr, "idle", state)
+    assert c["new_rows"] == 0 and c["version"] == 1
+    with open(commit_path, "rb") as f:
+        assert f.read() == before
+
+
 def _counts_dict(df):
     return {r["word"]: r["cnt"] for r in df.collect()}
 
@@ -463,6 +569,23 @@ def test_kafka_matview_short_read_fails_without_committing(
         "beta": 1,
         "gamma": 1,
     }
+
+
+def test_kafka_matview_counts_no_transaction_marker(spark, broker, tmp_path):
+    """A commit marker at the end of the increment is not counted as a
+    word, and the view commits the offset past it."""
+    from flink_kakfa_spark.streaming.kafka_matview import (
+        consume_wordcount_increment,
+        current_counts,
+    )
+
+    broker.add_topic("mv-txn", 1)
+    state = str(tmp_path / "state")
+    produce(broker.addr, "mv-txn", [(None, b"alpha beta"), (None, b"alpha")])
+    _append_marker(broker, "mv-txn")
+    c = consume_wordcount_increment(spark, broker.addr, "mv-txn", state)
+    assert c["offsets"] == {"0": 3} and c["new_rows"] == 2
+    assert _counts_dict(current_counts(spark, state)) == {"alpha": 2, "beta": 1}
 
 
 def test_kafka_matview_commit_fsyncs_its_directory(tmp_path, monkeypatch):
