@@ -2,15 +2,21 @@
 
 Scale posture: plain ``spark.read.parquet`` so Catalyst's data-source V2
 path gives us predicate pushdown, column pruning, and partition-size
-splitting (``spark.sql.files.maxPartitionBytes``) for free. At 100 TB the
-same call reads a partitioned lake directory; nothing here changes.
+splitting (``spark.sql.files.maxPartitionBytes``) for free. The schema of
+a single file is inferred once per file version (``_read_parquet``):
+inference is a Spark job that reads the footer, and with inputs this
+small that job costs more than the data work of the query that opened
+the table. At 100 TB the same call reads a partitioned lake directory,
+whose schema is inferred on every open, as Spark does by default.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -21,6 +27,50 @@ TABLES = [
 DIM_TABLES = {"region", "nation", "supplier"}
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Session confs that change the Spark schema a Parquet footer converts to.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (absolute path, conf values) -> ((st_mtime_ns, st_size), inferred
+# schema): one entry per file and conf set, replaced when the file changes.
+_SCHEMAS: dict[tuple, tuple[tuple[int, int], StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a file's schema only once.
+
+    Inference runs a Spark job that reads the footer, on every open. For
+    a regular file the inferred ``StructType`` is kept, keyed by the
+    file's version (mtime and size) and by the confs that change how
+    Spark converts it, and later opens read with ``.schema(...)``, which
+    starts no job. The schema is kept, not the DataFrame: two opens must
+    stay distinct plans (a self-join over one DataFrame is ambiguous), and
+    a ``StructType`` holds no JVM handle, so it outlives a session restart.
+
+    Anything else — a lake directory, a non-local URI — is read exactly as
+    plain ``spark.read.parquet``: a directory's mtime and size do not
+    change when a file inside it is rewritten or a nested partition is
+    added, so no stat can tell that a kept schema went stale.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    version = (st.st_mtime_ns, st.st_size)
+    kept = _SCHEMAS.get(key)
+    if kept is not None and kept[0] == version:
+        return spark.read.schema(kept[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (version, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
@@ -45,7 +95,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     d = sf_dir or DEFAULT_SF_DIR
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{d}/{name}.parquet")
+        df = _read_parquet(spark, f"{d}/{name}.parquet")
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
             # nanos-as-long generation. Integer division: ns ≈ 1.7e18
@@ -57,7 +107,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
             # same across fixture generations (UTC session ⇒ same instants).
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{d}/{name}.parquet")
+    return _read_parquet(spark, f"{d}/{name}.parquet")
 
 
 _BYTE_SUFFIXES = {"k": 10, "m": 20, "g": 30, "t": 40}

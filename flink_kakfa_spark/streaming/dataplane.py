@@ -15,9 +15,10 @@ and send every job over it through one.
 - ``read_topic_incremental`` — that read as a frame of ``READ_SCHEMA``
   (key, value, topic, partition, offset, timestamp_ms), built from one
   Arrow table, plus the end offsets.
-- ``write_topic``  — produce: the rows come back as one Arrow table and
-  record *i* goes to Kafka partition *i mod n*, in bounded record
-  batches.
+- ``write_topic``  — produce: the rows come back as one Arrow table; a
+  keyed record goes to the partition Kafka's default partitioner picks
+  (``murmur2`` of the key), unkeyed record *i* to partition *i mod n*,
+  in bounded record batches.
 - ``foreach_batch_sink`` — adapter so a streaming query can sink to
   Kafka through ``writeStream.foreachBatch``, keyed by the batch's
   ``key`` column when it has one (exactly-once per batch id is the
@@ -26,7 +27,9 @@ and send every job over it through one.
 Partitioning parity note: the reference producer uses kafka-go's
 ``LeastBytes`` balancer (``go/producer/producer.go:74``). With the
 generator's near-equal message sizes LeastBytes degenerates to the
-per-record round-robin ``write_topic`` implements.
+per-record round-robin ``write_topic`` implements for unkeyed records.
+Keyed records follow the Java client's default partitioner, so a
+consumer of one partition sees every record of its keys.
 """
 
 from __future__ import annotations
@@ -61,6 +64,26 @@ READ_SCHEMA = pa.schema(
 )
 
 _PRODUCE_CHUNK = 500  # records per Produce RPC
+
+_M32 = 0xFFFFFFFF
+
+
+def murmur2(data: bytes) -> int:
+    """Kafka's 32-bit murmur2 (``org.apache.kafka.common.utils.Utils``),
+    as a signed int like the Java one."""
+    m, n = 0x5BD1E995, len(data)
+    h = (0x9747B28C ^ n) & _M32
+    n4 = n & ~3
+    for i in range(0, n4, 4):
+        k = (int.from_bytes(data[i : i + 4], "little") * m) & _M32
+        k = ((k ^ (k >> 24)) * m) & _M32
+        h = ((h * m) & _M32) ^ k
+    if n & 3:
+        h ^= int.from_bytes(data[n4:], "little")
+        h = (h * m) & _M32
+    h = ((h ^ (h >> 13)) * m) & _M32
+    h ^= h >> 15
+    return h - (1 << 32) if h & 0x80000000 else h
 
 
 def partition_ids(bootstrap: str, topic: str) -> list[int]:
@@ -144,9 +167,12 @@ def write_topic(
 ) -> int:
     """Produce every row of ``df``; returns the number of records written.
 
-    The rows are collected once, as one Arrow table; record *i* goes to
-    Kafka partition *i mod n* in ``_PRODUCE_CHUNK``-record batches
-    (bounded RPC frames however many rows ``df`` holds).
+    The rows are collected once, as one Arrow table. A record with a key
+    goes to partition ``(murmur2(key) & 0x7fffffff) % n``, as Kafka's
+    default partitioner sends it; record *i* without one goes to
+    partition *i mod n*. Each partition's records go in
+    ``_PRODUCE_CHUNK``-record batches (bounded RPC frames however many
+    rows ``df`` holds).
     """
     n_kafka = len(partition_ids(bootstrap, topic))
     cols = [F.col(value_col).cast("binary").alias("value")]
@@ -159,8 +185,11 @@ def write_topic(
         if key_col is not None
         else [None] * len(values)
     )
-    for p in range(n_kafka):
-        records = list(zip(keys[p::n_kafka], values[p::n_kafka]))
+    by_partition = [[] for _ in range(n_kafka)]
+    for i, (k, v) in enumerate(zip(keys, values)):
+        p = i % n_kafka if k is None else (murmur2(k) & 0x7FFFFFFF) % n_kafka
+        by_partition[p].append((k, v))
+    for p, records in enumerate(by_partition):
         for i in range(0, len(records), _PRODUCE_CHUNK):
             produce(bootstrap, topic, records[i : i + _PRODUCE_CHUNK], partition=p)
     return len(values)

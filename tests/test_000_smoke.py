@@ -186,6 +186,24 @@ def test_partial_layout_and_cms_cells_have_one_home():
     assert not offenders, "spelled outside its one home:\n" + "\n".join(offenders)
 
 
+def test_operators_open_tables_only_through_load_table():
+    """Operator modules open their inputs with ``sources/tables.load_table``,
+    which infers each file's schema once; a direct ``spark.read`` would
+    start a schema-inference job every time its builder runs."""
+    offenders = []
+    for path in sorted((PKG / "operators").rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        offenders += [
+            f"{path.relative_to(REPO)}:{node.lineno}: .read"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and node.attr == "read"
+            and id(node) not in called  # f.read() is a file read
+        ]
+    assert not offenders, "table opened outside load_table:\n" + "\n".join(offenders)
+
+
 def test_entry_module_exposes_driver_contract():
     """__spark_entry__.py must expose entry/queries/oracle_sql."""
     import importlib.util

@@ -65,6 +65,22 @@ def test_multi_batch_set_with_trailing_partial():
     assert [r.offset for r in recs] == [0, 1, 2]
 
 
+@pytest.mark.parametrize(
+    "key, want",
+    [  # Kafka's UtilsTest.testMurmur2 vectors
+        ("21", -973932308),
+        ("foobar", -790332482),
+        ("a-little-bit-long-string", -985981536),
+        ("a-little-bit-longer-string", -1486304829),
+        ("abc", 479470107),
+    ],
+)
+def test_murmur2_matches_kafka(key, want):
+    from flink_kakfa_spark.streaming.dataplane import murmur2
+
+    assert murmur2(key.encode()) == want
+
+
 # ------------------------------------------------------------ RPC paths
 
 
@@ -243,6 +259,38 @@ def test_write_topic_spreads_a_local_frame_over_every_partition(spark, broker):
     df = spark.createDataFrame(pd.DataFrame({"value": [f"m{i}" for i in range(8)]}))
     assert write_topic(df, broker.addr, "spread") == 8
     ends = [list_offset(broker.addr, "spread", p, LATEST) for p in range(4)]
+    assert ends == [2, 2, 2, 2]
+
+
+def test_keyed_records_land_where_kafka_puts_them(spark, broker):
+    """A keyed record goes to (murmur2(key) & 0x7fffffff) % n, Kafka's
+    default partitioner, so every record of one key shares a partition;
+    unkeyed records still go round-robin."""
+    from flink_kakfa_spark.streaming.dataplane import (
+        murmur2,
+        read_topic_incremental,
+        write_topic,
+    )
+
+    broker.add_topic("keyed", 4)
+    keys = ["21", "foobar", "abc"]  # partitions 0, 2 and 3 of 4
+    # Three keys over four partitions: record order (i mod 4) would
+    # spread each key over every partition.
+    rows = [(keys[i % 3], f"v{i}") for i in range(12)]
+    df = spark.createDataFrame(rows, "key string, value string")
+    assert write_topic(df, broker.addr, "keyed", key_col="key") == 12
+    back = read_topic_incremental(spark, broker.addr, "keyed")[0].collect()
+    where = {}
+    for r in back:
+        where.setdefault(bytes(r["key"]).decode(), set()).add(r["partition"])
+    assert where == {
+        k: {(murmur2(k.encode()) & 0x7FFFFFFF) % 4} for k in keys
+    }
+
+    broker.add_topic("unkeyed", 4)
+    plain = spark.createDataFrame([(f"v{i}",) for i in range(8)], "value string")
+    assert write_topic(plain, broker.addr, "unkeyed") == 8
+    ends = [list_offset(broker.addr, "unkeyed", p, LATEST) for p in range(4)]
     assert ends == [2, 2, 2, 2]
 
 
