@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_kakfa_spark.functions.hashing import md5_uniform, sql_md5_uniform
+from flink_kakfa_spark.functions.vectors import as_double, sq_norm, sql_sq_norm
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table
 
@@ -389,7 +390,7 @@ def q_emb_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "emb_matryoshka_quality",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
       FROM embeddings
@@ -397,8 +398,8 @@ def q_emb_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms AS (
       SELECT
         vec_id, label,
-        SQRT(list_sum(list_transform(emb[1:16], x -> x * x))) AS norm16,
-        SQRT(list_sum(list_transform(emb, x -> x * x))) AS norm_full
+        SQRT({sql_sq_norm("emb[1:16]")}) AS norm16,
+        SQRT({sql_sq_norm("emb")}) AS norm_full
       FROM v
     )
     SELECT
@@ -426,14 +427,11 @@ def q_emb_matryoshka_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     is rounded off at 6 decimals on both engines.
     """
     e = load_table(spark, "embeddings", sf_dir)
-    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    sq_sum = lambda col: F.aggregate(  # noqa: E731 - local fold helper
-        col, F.lit(0.0), lambda s, x: s + x * x
-    )
+    emb = as_double("embedding")
     norms = e.select(
         "label",
-        F.sqrt(sq_sum(F.slice(emb, 1, 16))).alias("norm16"),
-        F.sqrt(sq_sum(emb)).alias("norm_full"),
+        F.sqrt(sq_norm(F.slice(emb, 1, 16))).alias("norm16"),
+        F.sqrt(sq_norm(emb)).alias("norm_full"),
     )
     retention = F.col("norm16") / F.col("norm_full")
     return norms.groupBy("label").agg(

@@ -36,6 +36,7 @@ from flink_kakfa_spark.functions.shingles import (
     sql_ngram_rows,
     word_ngrams,
 )
+from flink_kakfa_spark.functions.vectors import as_double, norm, sq_norm, unrolled_dot
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
@@ -905,7 +906,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``registry``'s module docstring. Inspect plans at sf0.001.
     """
     e = parallelize(load_table(spark, "embeddings", sf_dir), spark).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
+        "vec_id", as_double("embedding").alias("emb")
     )
     # one cheap count action to size the index — the same "driver-side
     # scalar picks the plan" pattern as the BPE trainer's per-round
@@ -918,34 +919,25 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH runs on one representative per distinct vector (the array
     # itself is the grouping key); each multi-member group is its own
     # class scored by the SAME rounded-cosine expression on (rep, rep)
-    # — 1.0 for any nonzero vector, NULL for a zero vector, exactly as
-    # the uncollapsed pipeline scores identical pairs — and classes
-    # expand through their 21 smallest member ids
+    # as the uncollapsed pipeline scores identical pairs — 1.0 for any
+    # nonzero vector, DIVIDE_BY_ZERO (ANSI) for a zero vector — and
+    # classes expand through their 21 smallest member ids
     # (``expand_collapsed_pairs``). Oracle unchanged (uncollapsed).
-    self_dot = F.aggregate(
-        F.zip_with("emb", "emb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
-    self_norm = F.sqrt(F.aggregate("emb", F.lit(0.0), lambda s, x: s + x * x))
     vgroups = with_member_rank(e, "emb", "vec_id").groupBy("emb").agg(
         F.min("vec_id").alias("rep_id"),
         F.count(F.lit(1)).alias("n_members"),
         members_capped("vec_id"),  # bounded buffer — see with_member_rank
     ).withColumn(
-        "self_score", F.round(self_dot / (self_norm * self_norm), 6)
+        "self_score", F.round(sq_norm("emb") / (norm("emb") * norm("emb")), 6)
     ).localCheckpoint()  # consumed by the LSH pipeline + expansions
     # Per-vector norm hoisted out of the pair loop, and folded with the
     # SAME left-associative order as the r7 HOF expression (bit-exact
     # doubles, oracle parity preserved).
-    sq_sum = "(" + " + ".join(
-        f"emb[{i}] * emb[{i}]" for i in range(_EMB_DIMS)
-    ) + ")"
     qv = vgroups.select(
         F.col("rep_id").alias("vec_id"), "emb", "members"
     ).withColumn(
         "q", F.transform("emb", lambda x: F.floor(x * 1000000).cast("long"))
-    ).withColumn("nrm", F.expr(f"sqrt({sq_sum})"))
+    ).withColumn("nrm", F.sqrt(unrolled_dot("emb", "emb", _EMB_DIMS)))
     # One signature per table: sign bits of integer hyperplane
     # projections. The hyperplane weights are a tables*bits-row
     # BROADCAST RELATION carrying each plane's 64 weights as DATA, so
@@ -1003,14 +995,11 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j in range(bits)
     ]
     wrel = spark.createDataFrame(wrows, "t int, j int, pw long, w array<long>")
-    pdot = F.expr(
-        "(" + " + ".join(f"q[{i}] * w[{i}]" for i in range(_EMB_DIMS)) + ")"
-    )
     banded = (
         qv.crossJoin(F.broadcast(wrel))
         .select(
             "vec_id", "emb", "nrm", "members", "t",
-            F.when(pdot > 0, F.col("pw"))
+            F.when(unrolled_dot("q", "w", _EMB_DIMS) > 0, F.col("pw"))
             .otherwise(F.lit(0).cast("long"))
             .alias("pj"),
         )
@@ -1027,14 +1016,10 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = banded.alias("a")
     b = banded.alias("b")
     # The per-pair rescore is ONE whole-stage-codegen expression: a
-    # 64-term unrolled dot (higher-order aggregate/zip_with lambdas
-    # run interpreted per element — ~100x slower on 1e8+ streamed
-    # candidates) over pre-hoisted norms. Term order matches the HOF
-    # fold left-associatively, so the doubles — and the oracle hash —
-    # are bit-identical.
-    dot = F.expr(
-        "(" + " + ".join(f"a.emb[{i}] * b.emb[{i}]" for i in range(_EMB_DIMS)) + ")"
-    )
+    # 64-term ``unrolled_dot`` (the fold's lambdas run interpreted per
+    # element — ~100x slower on 1e8+ streamed candidates) over
+    # pre-hoisted norms, bit-identical to the fold.
+    dot = unrolled_dot("a.emb", "b.emb", _EMB_DIMS)
     cross = (
         a.join(
             b,

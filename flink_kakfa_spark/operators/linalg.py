@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_kakfa_spark.functions.vectors import dot, sq_l2, sq_norm, sql_dot, sql_sq_norm
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
@@ -386,11 +387,7 @@ def q_emb_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cent = seeds
     for _ in range(_KM_ROUNDS):
-        d2 = F.aggregate(
-            F.zip_with("xq", "cent", lambda x, c: (x - c) * (x - c)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
+        d2 = sq_l2("xq", "cent", F.lit(0).cast("long"))
         assigned = (
             vecs.crossJoin(F.broadcast(cent))
             .select("vec_id", "xq", "cid", d2.alias("d2"))
@@ -474,19 +471,16 @@ _JL_SIGN_SQL = sql_md5_prefix(
     ),
     proj AS (
       SELECT vec_id, label,
-        CAST(list_sum(list_transform(xq, t -> t * t)) AS BIGINT) AS nx,
+        CAST({sql_sq_norm("xq")} AS BIGINT) AS nx,
         list_transform(
-          S, srow -> CAST(list_sum(
-            list_transform(list_zip(xq, srow), p -> p[1] * p[2])
-          ) AS BIGINT)
+          S, srow -> CAST({sql_dot("xq", "srow")} AS BIGINT)
         ) AS y
       FROM v CROSS JOIN smat
     ),
     ratio AS (
       SELECT label,
         CASE WHEN nx > 0 THEN CAST(FLOOR(
-          CAST(CAST(list_sum(list_transform(y, t -> t * t)) AS BIGINT)
-               AS DOUBLE)
+          CAST(CAST({sql_sq_norm("y")} AS BIGINT) AS DOUBLE)
           / ({_JL_M} * CAST(nx AS DOUBLE)) * 1000000
         ) AS BIGINT) ELSE 0 END AS micros
       FROM proj
@@ -555,21 +549,10 @@ def q_emb_jl_projection_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero = F.lit(0).cast("long")
     proj = e.crossJoin(F.broadcast(smat)).select(
         "label",
-        F.aggregate(
-            F.transform(F.col("xq"), lambda t: t * t), zero, lambda a, t: a + t
-        ).alias("nx"),
-        F.transform(
-            F.col("S"),
-            lambda srow: F.aggregate(
-                F.zip_with(F.col("xq"), srow, lambda a, b: a * b),
-                zero,
-                lambda acc, v: acc + v,
-            ),
-        ).alias("y"),
+        sq_norm("xq", zero).alias("nx"),
+        F.transform(F.col("S"), lambda srow: dot("xq", srow, zero)).alias("y"),
     )
-    ny = F.aggregate(
-        F.transform(F.col("y"), lambda t: t * t), zero, lambda a, t: a + t
-    )
+    ny = sq_norm("y", zero)
     micros = F.when(
         F.col("nx") > 0,
         F.floor(

@@ -3,9 +3,9 @@
 Brute-force cosine top-k is the exact baseline; the scale paths are
 (a) random-hyperplane LSH bucketing (sub-linear candidate generation)
 and (b) an IVF-style coarse quantizer (partition by nearest centroid,
-search only the probed cells). All vector math is higher-order
-functions on ``array<double>`` — JVM-side, codegen'd, no Python in the
-row path.
+search only the probed cells). All vector math is
+``functions/vectors.py``'s folds on ``array<double>`` — JVM-side, no
+Python in the row path.
 
 Scale notes (100 TB of vectors): the query vector is a broadcast (one
 row); brute force is a single narrow map + TakeOrderedAndProject(k) —
@@ -19,24 +19,17 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints at runtime
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_kakfa_spark.functions.vectors import (
+    as_double,
+    cosine,
+    dot,
+    norm,
+    sq_l2,
+    sql_dot,
+    sql_sq_norm,
+)
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
-
-
-def as_double(col) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, x: s + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def _with_query_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,13 +89,7 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sim_euclidean_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 variant: exact L2-distance top-10 (same plan shape as cosine)."""
     joined = _with_query_vector(spark, sf_dir)
-    l2 = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("emb"), F.col("qvec"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-    )
+    l2 = F.sqrt(sq_l2("emb", "qvec"))
     return (
         joined.select("vec_id", F.round(l2, 6).alias("l2_dist"))
         .orderBy(F.col("l2_dist").asc(), F.col("vec_id").asc())
@@ -241,11 +228,7 @@ def _lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         weights = F.expr(
             "array(" + ",".join(str(_ann_weight(p, i)) + "L" for i in range(_ANN_DIMS)) + ")"
         )
-        proj = F.aggregate(
-            F.zip_with(qarr, weights, lambda x, w: x * w),
-            F.lit(0).cast("long"),
-            lambda s, x: s + x,
-        )
+        proj = dot(qarr, weights, F.lit(0).cast("long"))
         return F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
 
     bucket = sum([plane_sign(p) for p in range(_ANN_BITS)], F.lit(0))
@@ -529,7 +512,7 @@ def q_sim_ivf_portable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the cell id is a partition column (probing 2 of 8 cells
     reads 25% of the data), the codebook is a broadcast literal, and
-    assignment is one narrow codegen'd pass.
+    assignment is one narrow pass.
     """
     e = parallelize(load_table(spark, "embeddings", sf_dir), spark).select(
         "vec_id", as_double("embedding").alias("emb")
@@ -545,11 +528,7 @@ def q_sim_ivf_portable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # assignment: argmin over the broadcast codebook — integer d2, ties
     # to lowest cell, computed as an array_min over (d2, cell) structs
-    d2 = lambda ca: F.aggregate(  # noqa: E731
-        F.zip_with("qa", ca, lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda s, x: s + x,
-    )
+    d2 = lambda ca: sq_l2("qa", ca, F.lit(0).cast("long"))  # noqa: E731
     best = F.array_min(
         F.transform(
             F.col("codebook"),
@@ -597,7 +576,7 @@ def q_sim_ivf_portable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_sq8_rescore_topk",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
       FROM embeddings
@@ -632,9 +611,9 @@ def q_sim_ivf_portable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx AS (
       SELECT
         vec_id, label, emb,
-        list_sum(list_transform(list_zip(dq, qvec), z -> z[1] * z[2]))
-          / (SQRT(list_sum(list_transform(dq, x -> x * x)))
-             * SQRT(list_sum(list_transform(qvec, x -> x * x)))) AS approx_cos
+        {sql_dot("dq", "qvec")}
+          / (SQRT({sql_sq_norm("dq")})
+             * SQRT({sql_sq_norm("qvec")})) AS approx_cos
       FROM dequant, q
     ),
     cut AS (
@@ -707,15 +686,7 @@ def q_sim_sq8_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     half_step = F.zip_with(qq, rs, lambda q_, r: ((q_ + 0.5) * r) / 256.0)
     dq = F.zip_with(half_step, F.col("mns"), lambda x, mn: mn + x)
-
-    def fold_dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        )
-
-    approx = fold_dot(dq, F.col("qvec")) / (
-        F.sqrt(fold_dot(dq, dq)) * F.sqrt(fold_dot(F.col("qvec"), F.col("qvec")))
-    )
+    approx = cosine(dq, F.col("qvec"))
     shortlist = (
         cand.select("vec_id", "label", "emb", "qvec", approx.alias("approx_raw"))
         .orderBy(F.col("approx_raw").desc(), F.col("vec_id").asc())

@@ -17,9 +17,9 @@ distances, so assignment is bit-identical across engines):
   cell drop members whose cosine to the cell representative exceeds a
   threshold. The embedding-space analogue of MinHash document dedup.
 
-Scale notes: PQ assignment and ADC scoring are ONE narrow codegen'd
-pass (codebook and lookup table are broadcast 1-row frames; no
-shuffle before TakeOrdered(shortlist)); SemDeDup shuffles once on the
+Scale notes: PQ assignment and ADC scoring are ONE narrow pass
+(codebook and lookup table are broadcast 1-row frames; no shuffle
+before TakeOrdered(shortlist)); SemDeDup shuffles once on the
 cell id, and the per-cell representative join is a broadcast (#cells
 rows). Both follow the survey's ANN mandate: brute force as baseline,
 bucketed/compressed variants as the scale path.
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.operators.similarity import as_double, cosine
+from flink_kakfa_spark.functions.vectors import as_double, cosine, spark_sql_sq_l2
 from flink_kakfa_spark.registry import query
 from flink_kakfa_spark.sources.tables import load_table, parallelize
 
@@ -142,18 +142,14 @@ def q_sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_list(F.struct("m", "c", "cv"))).alias("cb")
     )
     # query ADC table: d2 from the query's 8 subvectors to all 128
-    # sub-centroids — 128 rows, folded to a broadcast 1-row array
-    d2 = (
-        "aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)),"
-        " 0L, (s, x) -> s + x)"
-    )
-    # flat ADC lookup table: qdl[m*K + c] = d2(query_sub_m, cent_c) —
-    # O(1) per-subspace lookup instead of a 128-struct scan
+    # sub-centroids — 128 rows, folded to a broadcast 1-row flat lookup
+    # table qdl[m*K + c] = d2(query_sub_m, cent_c): O(1) per-subspace
+    # lookup instead of a 128-struct scan
     qd = (
         subs.filter(F.col("vec_id") == 0)
         .join(F.broadcast(cents), "m")
         .select((F.col("m") * _PQ_K + F.col("c")).alias("idx"),
-                F.expr(d2).alias("qdist"))
+                F.expr(spark_sql_sq_l2("sv", "cv")).alias("qdist"))
         .groupBy()
         .agg(
             F.expr(
@@ -177,9 +173,7 @@ def q_sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       transform(
         array(transform(sequence(0, {_PQ_M - 1}), m ->
           array_min(transform(filter(cb, e -> e.m = m),
-            e -> struct(aggregate(zip_with(subsv[m], e.cv,
-                          (x, y) -> (x - y) * (x - y)),
-                        0L, (s, x) -> s + x) AS d2,
+            e -> struct({spark_sql_sq_l2("subsv[m]", "e.cv")} AS d2,
                         e.c AS c))).c)), codes ->
         aggregate(transform(sequence(0, {_PQ_M - 1}),
                             m -> qdl[int(m * {_PQ_K}) + int(codes[m])]),
@@ -282,8 +276,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     best = (
         "array_min(transform(cb, e -> struct("
-        "aggregate(zip_with(qa, e.ca, (x, y) -> (x - y) * (x - y)),"
-        " 0L, (s, x) -> s + x) AS d2, e.cell AS cell))).cell"
+        f"{spark_sql_sq_l2('qa', 'e.ca')} AS d2, e.cell AS cell))).cell"
     )
     cells = (
         qz.crossJoin(F.broadcast(cents))

@@ -89,12 +89,14 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
 
     # Defensive: queries may run under a driver-owned session that didn't
     # go through get_spark(); timestamp value-hashes vs the DuckDB oracle
-    # require UTC session semantics.
+    # require UTC session semantics. Parquet NANOS timestamps read as
+    # long for every table, so no table's schema (or its cache entry)
+    # depends on whether `events` was opened first.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     d = sf_dir or DEFAULT_SF_DIR
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = _read_parquet(spark, f"{d}/{name}.parquet")
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):

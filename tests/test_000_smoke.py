@@ -146,6 +146,102 @@ def test_shingles_and_minhash_are_spelled_only_in_functions_shingles():
     )
 
 
+def _vector_math_spellings(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, what) for each hand-spelled vector fold in a parsed module:
+    an ``aggregate`` over a ``zip_with``, a sum-of-squares fold (``s + x *
+    x``, or an ``aggregate`` over ``transform(c, x -> x * x)``), and an
+    element-wise cast of an array to DOUBLE."""
+
+    def call_of(node, name):
+        return isinstance(node, ast.Call) and getattr(node.func, "attr", None) == name
+
+    def params(lam):
+        return [a.arg for a in lam.args.args]
+
+    def square_of(expr, name):
+        return (
+            isinstance(expr, ast.BinOp)
+            and isinstance(expr.op, ast.Mult)
+            and getattr(expr.left, "id", None) == name
+            and getattr(expr.right, "id", None) == name
+        )
+
+    found = []
+    for node in ast.walk(tree):
+        if call_of(node, "aggregate") and node.args:
+            first = node.args[0]
+            if call_of(first, "zip_with"):
+                found.append((node.lineno, "aggregate over zip_with"))
+            elif call_of(first, "transform") and any(
+                isinstance(a, ast.Lambda) and square_of(a.body, params(a)[0])
+                for a in first.args
+            ):
+                found.append((node.lineno, "aggregate over transform(x -> x * x)"))
+        elif isinstance(node, ast.Lambda) and len(params(node)) == 2:
+            acc, x = params(node)
+            body = node.body
+            if (
+                isinstance(body, ast.BinOp)
+                and isinstance(body.op, ast.Add)
+                and getattr(body.left, "id", None) == acc
+                and square_of(body.right, x)
+            ):
+                found.append((node.lineno, "sum-of-squares fold"))
+        elif call_of(node, "transform") and len(node.args) == 2:
+            lam = node.args[1]
+            if (
+                isinstance(lam, ast.Lambda)
+                and call_of(lam.body, "cast")
+                and getattr(lam.body.func.value, "id", None) == params(lam)[0]
+                and [getattr(a, "value", None) for a in lam.body.args] == ["double"]
+            ):
+                found.append((node.lineno, "element-wise cast to double"))
+    return found
+
+
+def test_vector_math_is_spelled_only_in_functions_vectors():
+    """Dot products, squared norms and squared L2 distances have one home:
+    operators call functions/vectors.py for the Spark fold, its Spark SQL
+    text, the unrolled dot and the DuckDB forms, cast embeddings with its
+    ``as_double``, and import none of these from another operator module."""
+    import re
+
+    home = PKG / "functions" / "vectors.py"
+    spellings = [
+        re.compile(r"aggregate\(zip_with\("),  # Spark SQL text fold
+        re.compile(r"\[\{i\}\] \* "),  # unrolled dot term
+        re.compile(r"\b(\w+) -> \1 \* \1\b"),  # SQL square lambda
+        re.compile(r"\b(\w+) -> \1\[1\] \* \1\[2\]"),  # DuckDB zipped product
+    ]
+    shared = {"as_double", "dot", "norm", "cosine"}
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == home:
+            continue
+        rel = path.relative_to(REPO)
+        text = path.read_text()
+        tree = ast.parse(text)
+        offenders += [
+            f"{rel}:{n}: {line.strip()}"
+            for n, line in enumerate(text.splitlines(), 1)
+            if any(s.search(line) for s in spellings)
+        ]
+        offenders += [f"{rel}:{n}: {what}" for n, what in _vector_math_spellings(tree)]
+        if path.parent.name != "operators":
+            continue
+        offenders += [
+            f"{rel}:{node.lineno}: imports {a.name} from {node.module}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            and (node.module or "").startswith("flink_kakfa_spark.operators")
+            for a in node.names
+            if a.name in shared
+        ]
+    assert not offenders, "vector math spelled outside functions/vectors.py:\n" + "\n".join(
+        sorted(offenders)
+    )
+
+
 def _enclosing_functions(tree: ast.AST) -> dict[int, str]:
     """Line number -> name of the outermost function that holds it
     (``ast.walk`` is breadth-first, so outer definitions come first)."""

@@ -82,6 +82,22 @@ def test_events_ts_reads_as_session_timestamp_in_both_generations(spark, tmp_pat
         assert _events_ts(spark, str(d)) == TS_MICROS
 
 
+def test_opening_events_does_not_reinfer_tables_opened_before_it(spark, tmp_path):
+    """How a table's Parquet timestamps convert does not depend on whether
+    ``events`` was opened earlier in the session, so its kept schema
+    stays valid across that open."""
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")  # a fresh session
+    pq.write_table(pa.table({"o_orderkey": [1, 2, 3]}), tmp_path / "orders.parquet")
+    ts = pa.array(TS, pa.timestamp("us")).cast(pa.timestamp("ns"))
+    pq.write_table(pa.table({"user_id": [1, 2], "ts": ts}), tmp_path / "events.parquet")
+    _, first_jobs = _jobs(spark, lambda: load_table(spark, "orders", str(tmp_path)))
+    assert _events_ts(spark, str(tmp_path)) == TS_MICROS
+    again, again_jobs = _jobs(spark, lambda: load_table(spark, "orders", str(tmp_path)))
+    assert first_jobs > 0
+    assert again_jobs == 0
+    assert sorted(r[0] for r in again.collect()) == [1, 2, 3]
+
+
 def test_a_directory_reads_as_before(spark, tmp_path):
     """A lake directory is never cached: overwriting it with another
     schema reads the new one."""
