@@ -47,9 +47,11 @@ def norm(a: Column | str) -> Column:
 
 
 def cosine(a: Column | str, b: Column | str) -> Column:
-    """A zero vector raises DIVIDE_BY_ZERO under ANSI mode (DuckDB's
-    ``list_cosine_similarity`` returns -1.0 for it)."""
-    return dot(a, b) / (norm(a) * norm(b))
+    """``dot(a, b) / (norm(a) * norm(b))``, and -1.0 when either side is a
+    zero vector, as DuckDB's ``list_cosine_similarity`` answers (the
+    division would raise DIVIDE_BY_ZERO under ANSI mode)."""
+    den = norm(a) * norm(b)
+    return F.when(den == 0, F.lit(-1.0)).otherwise(dot(a, b) / den)
 
 
 def unrolled_dot(a: str, b: str, dims: int) -> Column:

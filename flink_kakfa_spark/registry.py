@@ -61,7 +61,6 @@ _QUERY_MODULES = [
     "flink_kakfa_spark.operators.media",
     "flink_kakfa_spark.operators.lake",
     "flink_kakfa_spark.operators.analytics",
-    "flink_kakfa_spark.operators.media_analysis",
     "flink_kakfa_spark.operators.text_advanced",
     "flink_kakfa_spark.operators.vector_extra",
     "flink_kakfa_spark.operators.mlprep",

@@ -324,24 +324,11 @@ def fetch(
     offset: int = 0,
     max_bytes: int = 8 * 1024 * 1024,
     max_wait_ms: int = 500,
-) -> tuple[list[Record], int]:
-    """Fetch v4 from ``offset``: returns (records, high_watermark)."""
-    records, _, hwm = _fetch(
-        bootstrap, topic, partition, offset, max_bytes, max_wait_ms
-    )
-    return records, hwm
-
-
-def _fetch(
-    bootstrap: str,
-    topic: str,
-    partition: int,
-    offset: int,
-    max_bytes: int = 8 * 1024 * 1024,
-    max_wait_ms: int = 500,
 ) -> tuple[list[Record], int, int]:
-    """``fetch``, plus the offset just past the last whole batch served
-    (``decode_record_set``; -1 when there is none)."""
+    """Fetch v4 from ``offset``: returns (records, next_offset,
+    high_watermark), where ``next_offset`` is the offset just past the
+    last whole batch served (``decode_record_set``; -1 when there is
+    none)."""
     body = (
         struct.pack(">iiii", -1, max_wait_ms, 1, max_bytes)  # replica/wait/min/max
         + struct.pack(">b", 0)  # isolation_level: read_uncommitted
@@ -390,7 +377,7 @@ def fetch_range(
     out: list[Record] = []
     offset = lo
     while offset < hi:
-        records, next_offset, _ = _fetch(bootstrap, topic, partition, offset)
+        records, next_offset, _ = fetch(bootstrap, topic, partition, offset)
         if next_offset <= offset:
             raise TopicAdminError(
                 f"Fetch({topic}/{partition}) returned nothing at offset "

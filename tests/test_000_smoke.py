@@ -282,6 +282,46 @@ def test_partial_layout_and_cms_cells_have_one_home():
     assert not offenders, "spelled outside its one home:\n" + "\n".join(offenders)
 
 
+def test_media_family_is_spelled_only_in_operators_media():
+    """The parametric media family (clip length, PCM sample, BMP header,
+    red-pixel formula) has one home: the codec block of operators/media.py
+    (its two encoders, its BMP decode stage and its two DuckDB CTE texts).
+    Code and oracle strings are scanned; docstrings may quote the forms."""
+    home = PKG / "operators" / "media.py"
+    codec_block = {"_wav_clips", "_bmp_images", "_decode_bmp", "_CLIP_SAMPLES", "_PIXELS"}
+    spellings = (
+        "800 + (doc_id % 5) * 100",  # clip length, Python and SQL
+        "doc_id * 31 + i * 17",  # PCM sample
+        "<2sIHHI",  # BITMAPFILEHEADER
+        "(d.doc_id * gx.x + gy.y) % 256",  # SQL red channel
+    )
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        text = path.read_text()
+        tree = ast.parse(text)
+        exempt = set()
+        for node in ast.walk(tree):
+            if isinstance(
+                node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+            ) and ast.get_docstring(node, clean=False) is not None:
+                exempt.update(range(node.body[0].lineno, node.body[0].end_lineno + 1))
+        if path == home:
+            for node in tree.body:
+                names = {getattr(node, "name", None)} | {
+                    getattr(t, "id", None) for t in getattr(node, "targets", ())
+                }
+                if names & codec_block:
+                    exempt.update(range(node.lineno, node.end_lineno + 1))
+        offenders += [
+            f"{path.relative_to(REPO)}:{n}: {line.strip()}"
+            for n, line in enumerate(text.splitlines(), 1)
+            if n not in exempt and any(s in line for s in spellings)
+        ]
+    assert not offenders, "media family spelled outside operators/media.py:\n" + "\n".join(
+        offenders
+    )
+
+
 def test_operators_open_tables_only_through_load_table():
     """Operator modules open their inputs with ``sources/tables.load_table``,
     which infers each file's schema once; a direct ``spark.read`` would

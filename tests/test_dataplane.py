@@ -89,7 +89,7 @@ def test_produce_fetch_roundtrip(broker):
     base = produce(broker.addr, "t", [(b"k1", b"v1"), (None, b"v2")])
     assert base == 0
     assert produce(broker.addr, "t", [(b"k3", b"v3")]) == 2
-    recs, hwm = fetch(broker.addr, "t", 0, 0)
+    recs, _, hwm = fetch(broker.addr, "t", 0, 0)
     assert hwm == 3
     assert [(r.key, r.value) for r in recs] == [
         (b"k1", b"v1"),
@@ -97,7 +97,7 @@ def test_produce_fetch_roundtrip(broker):
         (b"k3", b"v3"),
     ]
     # offset-bounded fetch skips whole earlier batches
-    recs2, _ = fetch(broker.addr, "t", 0, 2)
+    recs2, _, _ = fetch(broker.addr, "t", 0, 2)
     assert [r.offset for r in recs2] == [2]
 
 
@@ -704,7 +704,7 @@ def test_record_batch_gzip_and_headers_roundtrip(broker):
 
     broker.add_topic("gz", 1)
     produce(broker.addr, "gz", [(b"k", b"via-rpc", [("h", b"v")])])
-    recs, _ = fetch(broker.addr, "gz", 0, 0)
+    recs, _, _ = fetch(broker.addr, "gz", 0, 0)
     assert recs[0].headers == (("h", b"v"),)
 
 

@@ -5,7 +5,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_kakfa_spark.functions.vectors import as_double, dot, sq_norm, unrolled_dot
+from flink_kakfa_spark.functions.vectors import (
+    as_double,
+    cosine,
+    dot,
+    sq_norm,
+    unrolled_dot,
+)
 from flink_kakfa_spark.sources.tables import load_table
 
 
@@ -40,3 +46,30 @@ def test_unrolled_dot_and_sum_of_squares_forms_are_bit_identical(spark, sf_dir):
         for x, y in zip(r["a"], r["b"]):
             s += x * y
         assert r["dot"] == s
+
+
+def test_cosine_of_a_zero_vector_is_minus_one_as_in_duckdb(spark):
+    """A zero vector has no direction: DuckDB's ``list_cosine_similarity``
+    answers -1.0 against it, and ``cosine`` gives the same instead of
+    failing the query with DIVIDE_BY_ZERO; other pairs keep the plain
+    quotient."""
+    import math
+
+    import duckdb
+
+    want = duckdb.sql(
+        "SELECT list_cosine_similarity([0.0, 0.0]::DOUBLE[], [1.0, 2.0]::DOUBLE[]),"
+        " list_cosine_similarity([0.0, 0.0]::DOUBLE[], [0.0, 0.0]::DOUBLE[])"
+    ).fetchone()
+    assert want == (-1.0, -1.0)
+    row = (
+        spark.createDataFrame([([0.0, 0.0], [1.0, 2.0])], "z array<double>, v array<double>")
+        .select(
+            cosine("z", "v").alias("zv"),
+            cosine("z", "z").alias("zz"),
+            cosine("v", "v").alias("vv"),
+        )
+        .first()
+    )
+    assert (row["zv"], row["zz"]) == want
+    assert row["vv"] == 5.0 / (math.sqrt(5.0) * math.sqrt(5.0))
